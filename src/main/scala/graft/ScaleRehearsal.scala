@@ -177,8 +177,7 @@ object ScaleRehearsal {
     }
     def write(name: String, df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-    def base(name: String): DataFrame =
-      spark.read.parquet(s"$sfDir/$name.parquet")
+    def base(name: String): DataFrame = Tables.table(spark, sfDir, name)
 
     val orders = base("orders")
     guard(orders, "o_orderkey", StrideOrder)

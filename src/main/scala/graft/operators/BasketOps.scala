@@ -309,9 +309,8 @@ object BasketOps {
   /** Fact-proportional shuffle width for eager basket-table cuts: one
     * partition per ~64 MB of fact parquet, min 8 — grows with the
     * corpus, capped by the session width inside withAqeOff. */
-  private def factWidth(sfDir: String): Int = {
-    val bytes = java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$sfDir/lineitem.parquet"))
+  private[graft] def factWidth(sfDir: String): Int = {
+    val bytes = Tables.corpusBytes(sfDir, "lineitem")
     math.max(8L, bytes / (64L << 20)).toInt
   }
 

@@ -144,12 +144,8 @@ object GraphOps {
     * (lineitem + orders parquet bytes), rounded up to a power of two,
     * clamped to [8, 1024] — 8 at the test SFs, growing with the corpus
     * instead of a constant tuned to either local mode or a cluster. */
-  private def adjBuckets(sfDir: String): Int = {
-    val bytes =
-      java.nio.file.Files.size(
-        java.nio.file.Paths.get(s"$sfDir/lineitem.parquet")) +
-      java.nio.file.Files.size(
-        java.nio.file.Paths.get(s"$sfDir/orders.parquet"))
+  private[graft] def adjBuckets(sfDir: String): Int = {
+    val bytes = Tables.corpusBytes(sfDir, "lineitem", "orders")
     val want = (bytes / (64L << 20)).toInt + 1
     var nb = 8
     while (nb < want && nb < 1024) nb *= 2

@@ -101,9 +101,8 @@ object TextOps {
 
   /** Corpus-proportional shuffle width for eager text cuts: one
     * partition per ~64 MB of documents parquet, min 2. */
-  private def docWidth(sfDir: String): Int = {
-    val bytes = java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$sfDir/documents.parquet"))
+  private[graft] def docWidth(sfDir: String): Int = {
+    val bytes = Tables.corpusBytes(sfDir, "documents")
     math.max(2L, bytes / (64L << 20)).toInt
   }
 
