@@ -40,29 +40,20 @@ object Checkpoints {
   private val Counter = new java.util.concurrent.atomic.AtomicLong()
 
   /** Run `f` (query construction containing EAGER cuts, or an eager
-    * build) with AQE off and a data-proportional shuffle width,
-    * restoring the session confs after (round 17, guide §1 fixed
-    * costs): each eager execution collapses to one job instead of one
-    * per AQE exchange stage, over `width` right-sized partitions.
-    * Semantics-free — AQE re-plans, never re-defines. The
-    * `spark.graft.aqe.freeze` marker keeps [[Tables.tune]] (reached
-    * through loaders called inside the section) from re-enabling AQE
-    * mid-scope. Session-global set/restore, like the streaming replay
-    * partition override — statements on one session are serial here. */
+    * build) under [[SessionConf.AqeOff]] and a data-proportional
+    * shuffle width — `width`, capped by the session's current width,
+    * at least 2 (round 17, fixed per-job costs): each eager execution
+    * collapses to one job instead of one per AQE exchange stage, over
+    * right-sized partitions. Semantics-free — AQE re-plans, never
+    * re-defines. A [[SessionConf.scoped]] section, so concurrent or
+    * nested sections restore the session's own values however they
+    * exit. */
   def withAqeOff[T](spark: org.apache.spark.sql.SparkSession,
-      width: Int)(f: => T): T = AqeOff(spark) {
-    // the AQE/freeze/listing confs are ref-counted + thread-safe in
-    // AqeOff; the scope-local width set/restore below only clobbers a
-    // concurrent setter's value if that setter also wrote partitions,
-    // and restores conditionally to avoid undoing an interleaved set
-    val c = spark.conf
-    val prevP = c.get("spark.sql.shuffle.partitions")
-    val mine = math.max(2, math.min(width, prevP.toInt)).toString
-    c.set("spark.sql.shuffle.partitions", mine)
-    try f finally {
-      if (c.get("spark.sql.shuffle.partitions") == mine)
-        c.set("spark.sql.shuffle.partitions", prevP)
-    }
+      width: Int)(f: => T): T = {
+    val current = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    SessionConf.scoped(spark, SessionConf.AqeOff :+
+      ("spark.sql.shuffle.partitions" ->
+        math.max(2, math.min(width, current)).toString): _*)(f)
   }
 
   def cut(df: DataFrame): DataFrame =

@@ -27,15 +27,13 @@ object Tables {
 
   /** Runtime confs every contract query needs. The driver's Verify/Bench
     * sessions do NOT set these (SURVEY §1.3), and they are runtime SQLConfs,
-    * so each query path calls tune() first. Idempotent and cheap. */
+    * so each query path calls tune() first. Idempotent and cheap. It sets
+    * only fixed values that no section changes, so a loader called inside
+    * a [[SessionConf.scoped]] section (AQE off, a narrower width) leaves
+    * that section's confs as they are. */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
     c.set("spark.sql.session.timeZone", "UTC")
-    // honored unless a scoped AQE-off section is active (round 17:
-    // GraphOps.withAqeOff freezes AQE around eager iterative cuts;
-    // loaders called inside such a section must not re-enable it)
-    if (c.get("spark.graft.aqe.freeze", "false") != "true")
-      c.set("spark.sql.adaptive.enabled", "true")
     // events.parquet carries INT64 TIMESTAMP(NANOS,false), which the default
     // Spark 4 reader rejects (PARQUET_TYPE_ILLEGAL). Read it as epoch-nano
     // LongType instead; queries treat `ts` as a BIGINT and never emit a raw

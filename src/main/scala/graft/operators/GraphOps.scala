@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.Checkpoints.withAqeOff
 
 /** GRAPH ANALYTICS theme module (round 11 — the ExtrasN naming-debt
   * retirement, VERDICT r10 #7): every iterative-graph contract row and
@@ -125,10 +126,6 @@ object GraphOps {
         t
       }
     }
-
-  /** See [[graft.Checkpoints.withAqeOff]] — the one shared spelling. */
-  private def withAqeOff[T](spark: SparkSession, width: Int)(f: => T): T =
-    graft.Checkpoints.withAqeOff(spark, width)(f)
 
   /** Node-proportional shuffle width for the iterative kernels' cut
     * executions: one partition per ~2k nodes (node-sized vectors are
@@ -436,7 +433,8 @@ object GraphOps {
 
   /** Edge-proportional shuffle width for the co-purchase-graph loops:
     * one partition per ~250k staged edge rows (footer counts, no job),
-    * capped by the session width inside [[withAqeOff]]. */
+    * capped by the session width inside
+    * [[graft.Checkpoints.withAqeOff]]. */
   private def cpWidth(sfDir: String): Int = {
     val rows = footerRowCount(copurchaseHome(sfDir)).getOrElse(0L)
     if (rows <= 0L) Int.MaxValue else math.max(2L, rows / 250000L).toInt

@@ -230,38 +230,22 @@ object Joins {
     // join after the finally-restore, silently skipping the skew path
     withSkewConfs(spark) { skewedFactAgg(spark, sfDir).localCheckpoint(true) }
 
-  private[graft] def withSkewConfs[T](spark: SparkSession)(f: => T): T = {
-    val keep = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      "spark.sql.files.maxPartitionBytes",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1k")
-    // the planted 33% hot bucket is ~3x the median, not the default 5x
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2k")
-    spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    // the 1 MB default FLOORS the split target — at corpus scale no
-    // sub-MB partition could ever be "skewed" (found via the rule's
-    // debug sizes: max 112 KB vs an actual target clamped to 1 MB)
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1k")
-    // skew splits are MAPPER-granular (PartialReducerPartitionSpec
-    // ranges over map indexes): a single-split scan has one mapper and
-    // nothing to split, so force many map tasks at corpus scale
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try f
-    finally keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private[graft] def withSkewConfs[T](spark: SparkSession)(f: => T): T =
+    graft.SessionConf.scoped(spark,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      // the planted 33% hot bucket is ~3x the median, not the default 5x
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2k",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      // the 1 MB default FLOORS the split target — at corpus scale no
+      // sub-MB partition could ever be "skewed" (found via the rule's
+      // debug sizes: max 112 KB vs an actual target clamped to 1 MB)
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k",
+      // skew splits are MAPPER-granular (PartialReducerPartitionSpec
+      // ranges over map indexes): a single-split scan has one mapper and
+      // nothing to split, so force many map tasks at corpus scale
+      "spark.sql.files.maxPartitionBytes" -> "64k",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)
 
   /** The skewed join itself (split out so the spec can inspect its
     * executed plan under [[withSkewConfs]]): the planted fact keys ~67%

@@ -1234,10 +1234,6 @@ private[sources] class GraftRowLevelOperation(table: GraftParquetTable,
   override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = {
-        if (GraftDebug.enabled)
-          println("WRITEINFO schema=" + writeInfo.schema().catalogString +
-            " rowid=" + writeInfo.rowIdSchema() +
-            " meta=" + writeInfo.metadataSchema())
         // stage in a hidden side-dir: the rewrite's task phase must
         // not share the live dir's _temporary with a concurrent
         // writer (GraftTxn scaladoc — the double-apply hazard)

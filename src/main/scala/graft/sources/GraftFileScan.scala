@@ -294,9 +294,6 @@ private[sources] class GraftTaggedParquetScan(inner: ParquetScan,
       val merged = allowed.fold(next)(_ intersect next)
       allowed = Some(merged)
       onRuntimeFilter(merged.map(s => new File(new java.net.URI(s))))
-      if (GraftDebug.enabled)
-        println(s"GraftTaggedParquetScan runtime filter -> " +
-          s"${merged.size} files")
     }
   }
 

@@ -97,19 +97,13 @@ object GraftTxn {
     * exchange — measured on sql65: 4 jobs for one CDF image build, 48
     * jobs for the whole row. Disabling AQE inside the section packs
     * each phase into one job; results are unaffected (AQE re-plans,
-    * never re-defines), and the session conf is restored on exit. The
-    * `spark.graft.aqe.freeze` marker keeps Tables.tune — reached
-    * through operators a phase may call — from re-enabling it.
-    * Set/restore is session-global (like the replay partition override
-    * in Streams.runToTable): statements on one session are serial in
-    * this engine's execution model. */
+    * never re-defines). A [[graft.SessionConf.scoped]] section over
+    * [[graft.SessionConf.AqeOff]]: concurrent statements' phases
+    * (Round14Spec's conflict tests) enter and exit out of order, and
+    * the session still gets its own values back. */
   def describedNoAqe[T](spark: org.apache.spark.sql.SparkSession,
       phase: String)(body: => T): T = described(spark, phase) {
-    // ref-counted + thread-safe: concurrent statements' scopes must
-    // not capture each other's "off" state as a restore value — see
-    // [[graft.AqeOff]] (Round14Spec's concurrent-commit tests caught
-    // exactly that leak in the plain set/restore spelling)
-    graft.AqeOff(spark)(body)
+    graft.SessionConf.scoped(spark, graft.SessionConf.AqeOff: _*)(body)
   }
 
   /** Thrown by a losing commit. Message names the table and a sample

@@ -135,6 +135,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 import graft.{Det, Tables}
+import graft.SessionConf.{AqeOff, scoped}
 
 /** Structured Streaming operators — SURVEY §2.9 (ST1–ST7).
   *
@@ -216,7 +217,7 @@ object Streams {
   // A/B runs) parts=4 measured equal-to-worse (st12 7.97→11.4 s run 1,
   // 8.34→8.80 run 2; st15 3.57→4.72/3.85→3.85), and the full-bench
   // normalized diff showed st14/15/16 regressing. The global default
-  // of 2 stands; -Dgraft.stream.parts remains the experiment lever.
+  // of 2 stands.
 
   private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -229,21 +230,19 @@ object Streams {
       spark.catalog.dropTempView(s"graft_sink_$i")
     }
 
-  /** Disable AQE on a foreachBatch micro-batch's session CLONE (round
-    * 17, guide §1/§2 fixed costs): Spark disables AQE for the streaming
-    * plan itself, but each foreachBatch BODY runs as a regular batch
-    * query on the clone, where AQE turns every exchange into its own
-    * job — at replay batch sizes that is pure driver-round-trip
-    * overhead (measured: st19 41 jobs warm, wall 4.6 s for 3.5 s of
-    * task time). The clone dies with the query, so nothing to restore;
-    * the freeze marker keeps Tables.tune (reached through operators
-    * called inside bodies) from re-enabling it mid-query. Results are
-    * unaffected — AQE re-plans, never re-defines. */
-  private def aqeOffBatch(batch: DataFrame): Unit = {
-    val c = batch.sparkSession.conf
-    c.set("spark.graft.aqe.freeze", "true")
-    c.set("spark.sql.adaptive.enabled", "false")
-  }
+  private val Width = "spark.sql.shuffle.partitions"
+  private val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  // foreachBatch bodies run under [[graft.SessionConf.AqeOff]], scoped
+  // on the micro-batch's session CLONE (round 17, fixed per-job
+  // costs): Spark disables AQE for the streaming plan itself, but each
+  // body runs as a regular batch query on the clone, where AQE turns
+  // every exchange into its own job — at replay batch sizes that is
+  // pure per-job overhead (measured: st19 41 jobs warm, wall
+  // 4.6 s for 3.5 s of task time). Results are unaffected — AQE
+  // re-plans, never re-defines.
 
   /** Run a streaming frame to completion into a memory sink, return it.
     *
@@ -254,32 +253,15 @@ object Streams {
     * 1 is no better than 2 — still multi-partition state coverage).
     * (On a real cluster this knob is sized to executor count; state
     * partitioning is fixed at first checkpoint, and every contract query
-    * starts from a fresh checkpoint.) */
+    * starts from a fresh checkpoint.)
+    *
+    * Both confs are a [[graft.SessionConf.scoped]] section around the
+    * replay, so the session's own values come back however the replay
+    * exits, and a replay nested in another section (st6b's provider)
+    * restores that section's values. */
   def runToTable(spark: SparkSession, df: DataFrame, mode: OutputMode,
       partitions: Int = 2): DataFrame = {
     val name = s"graft_sink_${sinkCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    // -Dgraft.stream.parts overrides the replay partition count (perf
-    // experiments; production sizes this to executor count)
-    val parts = sys.props.get("graft.stream.parts")
-      .map(_.toInt).getOrElse(partitions)
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // -Dgraft.stream.store=rocksdb|hdfs — round-17 state-store A/B
-    // lever (VERDICT r16 ask #2); unset keeps each query's own choice
-    val prevStore = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    sys.props.get("graft.stream.store").foreach {
-      case "rocksdb" => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      case _ => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "HDFSBackedStateStoreProvider")
-    }
     // The trailing no-data micro-batch only advances the watermark to
     // evict state; none of the contract sinks depend on it (Complete /
     // Update re-emit on data batches; dedup and the inner join emit
@@ -290,9 +272,9 @@ object Streams {
     // count instead, one sentinel batch per stateful stage; see
     // [[stageOuterSplit]]). Skipping it saves a full state-store round
     // per query. A production continuous query would leave it on —
-    // restored in the finally block so only these replays skip it.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    // scoped so only these replays skip it.
+    scoped(spark, Width -> partitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val q = df.writeStream.outputMode(mode).format("memory").queryName(name)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -300,15 +282,6 @@ object Streams {
         val ps = q.recentProgress
         System.err.println(s"[graft] $name: ${ps.length} batches, " +
           ps.map(p => s"${p.batchId}:${p.durationMs.asScala.map { case (k, v) => s"$k=$v" }.mkString(",")}").mkString(" | "))
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      if (sys.props.contains("graft.stream.store")) prevStore match {
-        case Some(p) => spark.conf
-          .set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf
-          .unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
     spark.table(name)
@@ -551,37 +524,22 @@ object Streams {
   /** ST6b — transformWithState (the Spark-4-native arbitrary-state API,
     * successor to flatMapGroupsWithState): same per-user running stats,
     * held in a typed ValueState on the RocksDB state store. */
-  def st6bTransformWithState(spark: SparkSession, sfDir: String): DataFrame = {
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB provider. The set/restore
-    // is session-global (the provider is fixed at stream planning, so no
-    // per-writer option exists) — safe under the harness's sequential
-    // query execution; a concurrently-planned stream on this session
-    // would need its own session via spark.newSession()
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // changelog checkpointing ships per-batch deltas instead of a full
-    // RocksDB snapshot upload per commit — the production setting for
-    // frequent small batches
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
-    try {
+  def st6bTransformWithState(spark: SparkSession, sfDir: String): DataFrame =
+    // transformWithState requires the RocksDB provider, which is fixed
+    // at stream planning from the SESSION conf (no per-writer option
+    // exists), so it is scoped around the replay; changelog
+    // checkpointing ships per-batch deltas instead of a full RocksDB
+    // snapshot upload per commit — the production setting for frequent
+    // small batches
+    scoped(spark, RocksDbProvider,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+          "true") {
       import spark.implicits._
       val updated = evRows(spark, sfDir).groupByKey(_.user_id)
         .transformWithState(new RunningStatsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
       collapseUpdates(spark, updated)
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
-  }
 
   /** ST7 — stream-static join: streaming events against the static
     * customer dimension, aggregated per market segment. No pinned
@@ -907,13 +865,8 @@ object Streams {
     * sessions the watermark never closes). */
   def st13TimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = stageOuterSplit(spark, sfDir)
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    // session-global set/restore: see st6b's note on the sequential-
-    // execution assumption
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // the provider is session conf, scoped as in st6b
+    scoped(spark, RocksDbProvider) {
       import spark.implicits._
       import org.apache.spark.sql.streaming.TimeMode
       val schema = Tables.events(spark, sfDir).schema
@@ -931,13 +884,6 @@ object Streams {
         .select(col("user_id"), col("sess_start_us"), col("sess_end_us"),
           col("n_events"))
         .orderBy(col("user_id"), col("sess_start_us"))
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -951,9 +897,7 @@ object Streams {
     // prior run's files as already-committed and skip the replay
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    scoped(spark, Width -> "8") {
       val q = eventStream(spark, sfDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"), col("ts_us"))
@@ -963,7 +907,7 @@ object Streams {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(s"$outDir/data")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(Det.Money)).cast("double").as("sum_value"),
@@ -978,21 +922,20 @@ object Streams {
     val dir = Tables.scratchDir("st10", sfDir)
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(dir), true)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    scoped(spark, Width -> "8") {
       val q = eventStream(spark, sfDir)
         .filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          aqeOffBatch(batch)
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(dir)
+          scoped(batch.sparkSession, AqeOff: _*) {
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(dir)
+          }
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(dir)
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
@@ -1139,29 +1082,28 @@ object Streams {
       .delete(new org.apache.hadoop.fs.Path(outDir), true)
     val schema = Tables.embeddings(s, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    scoped(spark, Width -> "8") {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(dir)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          aqeOffBatch(batch)
-          val batchC = batch.join(
-            Clustering.assignToCentroids(batch, "vec_id", "embedding", cents)
-              .withColumnRenamed("vid", "vec_id"), "vec_id")
-          val matched = graft.api.VectorPipeline.groupedCosinePairsAgainst(
-              batchC, corpusC, "vec_id", "embedding", "cluster", 0.8)
-            .select(col("id_new")).distinct()
-          batch.select(col("vec_id"))
-            .join(matched, col("vec_id") === col("id_new"), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
+          scoped(batch.sparkSession, AqeOff: _*) {
+            val batchC = batch.join(
+              Clustering.assignToCentroids(batch, "vec_id", "embedding", cents)
+                .withColumnRenamed("vid", "vec_id"), "vec_id")
+            val matched = graft.api.VectorPipeline.groupedCosinePairsAgainst(
+                batchC, corpusC, "vec_id", "embedding", "cluster", 0.8)
+              .select(col("id_new")).distinct()
+            batch.select(col("vec_id"))
+              .join(matched, col("vec_id") === col("id_new"), "left_anti")
+              .withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(outDir)
+            ()
+          }
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(outDir)
       .select(col("vec_id")).orderBy(col("vec_id"))
   }
@@ -1177,26 +1119,25 @@ object Streams {
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(outDir), true)
     val schema = Tables.documents(s, sfDir).schema
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    scoped(spark, Width -> "8") {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(dir.toString)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          aqeOffBatch(batch)
-          val pSh = TextPipeline.shingleHashes(batch, "doc_id", "text", 3)
-          val dropped = TextPipeline.probePrefixIndex(idx, pSh)
-            .select(col("doc_new")).distinct()
-          batch.select(col("doc_id"))
-            .join(dropped, col("doc_id") === col("doc_new"), "left_anti")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
+          scoped(batch.sparkSession, AqeOff: _*) {
+            val pSh = TextPipeline.shingleHashes(batch, "doc_id", "text", 3)
+            val dropped = TextPipeline.probePrefixIndex(idx, pSh)
+              .select(col("doc_new")).distinct()
+            batch.select(col("doc_id"))
+              .join(dropped, col("doc_id") === col("doc_new"), "left_anti")
+              .withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(outDir)
+            ()
+          }
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(outDir)
       .select(col("doc_id")).orderBy(col("doc_id"))
   }
@@ -1217,20 +1158,20 @@ object Streams {
     val dir = stageProbeDocs(spark, sfDir)
     val schema = Tables.documents(s, sfDir).schema
     val name = s"graft_st20_sink_${sinkCounter.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .observe("graft_gate",
-        count(lit(1)).as("n_rows"),
-        sum(col("n_chars")).as("sum_chars"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination()
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val q = scoped(spark, Width -> "2") {
+      val run = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(dir)
+        .observe("graft_gate",
+          count(lit(1)).as("n_rows"),
+          sum(col("n_chars")).as("sum_chars"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Complete())
+        .trigger(Trigger.AvailableNow()).start()
+      run.awaitTermination()
+      run
+    }
     val gate = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("graft_gate")))
     val dataBatches = gate.filter(_.getLong(0) > 0L)
@@ -1265,24 +1206,23 @@ object Streams {
     def dim(version: Int): DataFrame =
       Seq("en", "de", "fr", "es", "zh").map(l => (l, s"${l}_v$version"))
         .toDF("lang", "label")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    scoped(spark, Width -> "4") {
       val q = s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(dir)
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          aqeOffBatch(batch)
-          // production: re-read the dim path here; the replay pins the
-          // version to the batch id so the oracle can reproduce it
-          batch.select(col("doc_id"), col("lang"))
-            .join(broadcast(dim(if (batchId == 0L) 1 else 2)), "lang")
-            .write.mode("append").parquet(outDir)
-          ()
+          scoped(batch.sparkSession, AqeOff: _*) {
+            // production: re-read the dim path here; the replay pins the
+            // version to the batch id so the oracle can reproduce it
+            batch.select(col("doc_id"), col("lang"))
+              .join(broadcast(dim(if (batchId == 0L) 1 else 2)), "lang")
+              .write.mode("append").parquet(outDir)
+            ()
+          }
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(outDir)
       .groupBy(col("lang"), col("label"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
@@ -1315,9 +1255,7 @@ object Streams {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    scoped(spark, Width -> "8") {
       val schema = Tables.events(s, sfDir).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1327,21 +1265,22 @@ object Streams {
           col("event_type").as("last_type"), col("value").as("last_value"))
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          aqeOffBatch(batch)
-          val existing =
-            if (fs.exists(new org.apache.hadoop.fs.Path(dataDir)))
-              s.read.parquet(dataDir)
-            else batch.limit(0)
-          existing.unionByName(batch)
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-            .localCheckpoint(true) // materialize BEFORE overwriting source
-            .write.mode("overwrite").parquet(dataDir)
-          ()
+          scoped(batch.sparkSession, AqeOff: _*) {
+            val existing =
+              if (fs.exists(new org.apache.hadoop.fs.Path(dataDir)))
+                s.read.parquet(dataDir)
+              else batch.limit(0)
+            existing.unionByName(batch)
+              .withColumn("rn", row_number().over(w))
+              .filter(col("rn") === 1).drop("rn")
+              .localCheckpoint(true) // materialize BEFORE overwriting source
+              .write.mode("overwrite").parquet(dataDir)
+            ()
+          }
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     Tables.tune(spark).read.parquet(dataDir).orderBy(col("user_id"))
   }
 
@@ -1380,9 +1319,7 @@ object Streams {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("last_ts_us").desc, col("last_event_id").desc)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    try scoped(spark, Width -> "8") {
       val schema = Tables.events(s, sfDir).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1392,32 +1329,30 @@ object Streams {
           col("event_type").as("last_type"), col("value").as("last_value"))
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          aqeOffBatch(batch)
-          // the temp view lives on the micro-batch's session CLONE —
-          // the MERGE must run there too or it can't resolve the view
-          val bs = batch.sparkSession
-          batch.withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-            .createOrReplaceTempView("st27_batch")
-          graft.sources.GraftTxn.retryOnConflict() {
-            bs.sql("MERGE INTO graft27.st27_serve t USING st27_batch b " +
-              "ON t.user_id = b.user_id " +
-              "WHEN MATCHED AND (b.last_ts_us > t.last_ts_us OR " +
-              "(b.last_ts_us = t.last_ts_us AND " +
-              "b.last_event_id > t.last_event_id)) THEN UPDATE SET * " +
-              "WHEN NOT MATCHED THEN INSERT *").collect(): Unit
+          scoped(batch.sparkSession, AqeOff: _*) {
+            // the temp view lives on the micro-batch's session CLONE —
+            // the MERGE must run there too or it can't resolve the view
+            val bs = batch.sparkSession
+            batch.withColumn("rn", row_number().over(w))
+              .filter(col("rn") === 1).drop("rn")
+              .createOrReplaceTempView("st27_batch")
+            graft.sources.GraftTxn.retryOnConflict() {
+              bs.sql("MERGE INTO graft27.st27_serve t USING st27_batch b " +
+                "ON t.user_id = b.user_id " +
+                "WHEN MATCHED AND (b.last_ts_us > t.last_ts_us OR " +
+                "(b.last_ts_us = t.last_ts_us AND " +
+                "b.last_event_id > t.last_event_id)) THEN UPDATE SET * " +
+                "WHEN NOT MATCHED THEN INSERT *").collect(): Unit
+            }
+            ()
           }
-          ()
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       val out = s.table("graft27.st27_serve").orderBy(col("user_id"))
         .localCheckpoint(true)
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      s.sql("DROP TABLE IF EXISTS graft27.st27_serve"): Unit
-    }
+    } finally s.sql("DROP TABLE IF EXISTS graft27.st27_serve"): Unit
   }
 
   /** ST23 — checkpoint recovery (exactly-once resume, VERDICT r7 #5):
@@ -1474,9 +1409,7 @@ object Streams {
       q.awaitTermination()
       (spark.table(name), q.recentProgress.map(_.numInputRows).sum)
     }
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    scoped(spark, Width -> "2") {
       val nA = stageHalf(even = true, "half_a")
       val (_, rows1) = leg()
       val nB = stageHalf(even = false, "half_b")
@@ -1486,7 +1419,7 @@ object Streams {
         .withColumn("recovered_ok",
           lit(nA > 0 && nB > 0 && rows1 == nA && rows2 == nB))
         .orderBy(col("event_type"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   /** ST24 — stream-stream JOIN chained into a windowed AGGREGATE (the
@@ -1573,9 +1506,7 @@ object Streams {
       org.apache.hadoop.fs.FileSystem
         .get(spark.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(outDir), true)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      scoped(spark, Width -> "4") {
         val q = s.readStream.format("graft-cdc")
           .option("tableDir", dir.getAbsolutePath)
           .option("startVersion", "1") // first emitted batch diffs v1→v2
@@ -1583,20 +1514,21 @@ object Streams {
           .load()
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            aqeOffBatch(batch)
-            val bs = batch.sparkSession // catalog resolves on the clone
-            batch.select(col("version")).collect().foreach { row =>
-              val v = row.getLong(0)
-              graft.operators.Dml
-                .versionDiff(bs, "graft28.nation_cdc", v - 1, v, Seq("k"))
-                .filter(col("change_type") =!= "unchanged")
-                .withColumn("version", lit(v))
-                .write.mode("append").parquet(outDir)
+            scoped(batch.sparkSession, AqeOff: _*) {
+              val bs = batch.sparkSession // catalog resolves on the clone
+              batch.select(col("version")).collect().foreach { row =>
+                val v = row.getLong(0)
+                graft.operators.Dml
+                  .versionDiff(bs, "graft28.nation_cdc", v - 1, v, Seq("k"))
+                  .filter(col("change_type") =!= "unchanged")
+                  .withColumn("version", lit(v))
+                  .write.mode("append").parquet(outDir)
+              }
             }
           }
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       val streamed = Tables.tune(spark).read.parquet(outDir)
       // compose check: NET of the streamed batches (latest event per
       // key — sound here: no key is deleted-then-reinserted or reverted
@@ -1661,16 +1593,14 @@ object Streams {
         .get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
       fs.delete(new org.apache.hadoop.fs.Path(cpDir), true)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      scoped(s, Width -> "4") {
         val q = graft.sources.GraftCdf.rowsStream(s, dir)
           .writeStream.format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", cpDir)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       val streamed = Tables.tune(s).read.parquet(outDir)
       // row images → per-(key, version) change class: both sides
       // present = changed, insert-only = inserted, delete-only =
@@ -1809,8 +1739,6 @@ object Streams {
         .get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
       fs.delete(new org.apache.hadoop.fs.Path(cpDir), true)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       def runOnce(): Long = {
         val q = s.readStream.format("graft-snapshot-cdc")
           .option("tableDir", dir.getAbsolutePath)
@@ -1824,7 +1752,7 @@ object Streams {
         q.awaitTermination()
         q.recentProgress.count(_.numInputRows > 0).toLong
       }
-      try {
+      scoped(s, Width -> "4") {
         val b1 = runOnce() // snapshot backfill only (v2 state)
         val snapRows = Tables.tune(s).read.parquet(outDir).count()
         s.sql(s"DELETE FROM $cat.nation_sf WHERE k % 3 = 0") // v3
@@ -1857,7 +1785,7 @@ object Streams {
           .withColumn("phases_ok", lit(phasesOk))
           .orderBy(col("change_type"))
           .localCheckpoint(true)
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
     } finally s.sql(s"DROP TABLE IF EXISTS $cat.nation_sf"): Unit
   }
 

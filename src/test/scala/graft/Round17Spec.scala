@@ -78,27 +78,6 @@ class Round17Spec extends SparkSpec {
       s"bloom probe must appear in the executed plan:\n$plan")
   }
 
-  test("AqeOff scopes are ref-counted across threads: concurrent engine " +
-      "sections restore AQE on the session (the Round14 conflict-test " +
-      "interleave must not leak adaptive=false)") {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    import scala.jdk.CollectionConverters._
-    val tasks = (1 to 8).map { _ =>
-      new java.util.concurrent.Callable[Unit] {
-        def call(): Unit =
-          graft.sources.GraftTxn.describedNoAqe(spark, "probe") {
-            Thread.sleep(20)
-            assert(spark.conf.get("spark.sql.adaptive.enabled") == "false")
-          }
-      }
-    }
-    pool.invokeAll(tasks.asJava).asScala.foreach(_.get())
-    pool.shutdown()
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    assert(spark.conf.get("spark.graft.aqe.freeze", "false") == "false")
-  }
-
   test("x111 staged adjacency: window-degree bucketed build rows equal " +
       "the groupBy+join degree spelling; footer bound covers max id") {
     val probe = GraphOps.x111PageRank(spark, sf)
