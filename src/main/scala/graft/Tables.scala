@@ -184,13 +184,18 @@ object Tables {
     root
   }
 
-  /** size:mtime staleness fingerprint of one corpus table (the x54
-    * rule): regenerated test data changes the fingerprint, so a shared
-    * artifact built from the old corpus can never serve the new one. */
+  /** Staleness fingerprint of one corpus table (the x54 rule): the
+    * name, size and mtime of each of its [[dataFiles]]. Regenerated
+    * test data — or one rewritten part file of a directory table, which
+    * leaves the directory entry as it was — changes the fingerprint, so
+    * a shared artifact built from the old corpus can never serve the
+    * new one. */
   def corpusFingerprint(sfDir: String, tableName: String): String = {
-    val p = java.nio.file.Paths.get(s"$sfDir/$tableName.parquet")
-    s"${java.nio.file.Files.size(p)}:" +
-      s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
+    import java.nio.file.Files
+    dataFiles(sfDir, tableName).map { f =>
+      s"${f.getFileName}:${Files.size(f)}:" +
+        s"${Files.getLastModifiedTime(f).toMillis}"
+    }.mkString(",")
   }
 
   /** Final home of a shared artifact. The FINGERPRINT IS THE NAME: a

@@ -8,10 +8,13 @@ import graft.{Det, Tables}
 /** MARKET-BASKET / SEQUENCE-MINING theme module (round 11 — the
   * ExtrasN naming-debt retirement, VERDICT r10 #7): the co-occurrence
   * miners over order baskets and event streams, moved verbatim from
-  * Extras9/13/16. All pair/triple generation flows through the capped
-  * shared basket tables (a mega-basket cannot explode the pair
-  * stream; the caps are the PlanLint self-join bound) and the staged
-  * cross-process pair artifact — never an uncapped self-join.
+  * Extras9/13/16. All pair generation flows through ONE array-form
+  * kernel ([[basketItems]] then [[pairsFromBaskets]]): each basket is
+  * one row holding its sorted distinct items, and its pairs are
+  * enumerated inside that row — no basket self-join. The basket caps
+  * still matter: one basket row emits C(cap, 2) pairs at most, so a
+  * mega-basket cannot explode the pair stream. The customer-grain pair
+  * table is also staged cross-process.
   *
   * Rows: x71 co-purchase pairs, x142 association rules, x143 Markov
   * transitions, x144 item-item CF, x160 3-itemset Apriori.
@@ -21,67 +24,76 @@ object BasketOps {
   import Det.{sql => d}
 
   /** X71 — market-basket co-occurrence (parts bought together): pairs
-    * of parts sharing ≥ 2 orders, top-100. The self-join is keyed on
-    * l_orderkey, so both sides shuffle on the SAME key (one exchange,
-    * reused) and per-order pair fan-out is bounded by basket size —
-    * with the hot-basket guard (orders with > 50 distinct parts are
-    * excluded BEFORE the self-join) a pathological mega-order cannot
+    * of parts sharing ≥ 2 orders, top-100. Each order is one row of
+    * its sorted distinct parts and its pairs are enumerated in that
+    * row, so the pair stream costs one shuffle on the order key and
+    * one on the pair. The hot-basket guard (orders with > 50 distinct
+    * parts contribute no pairs) bounds what one order row emits to
+    * C(50, 2) = 1225 pairs — a pathological mega-order cannot
     * quadratically explode the pair stream. The guard is the graph
     * form of x33/x41's hot-key cap; the oracle applies the identical
     * cap so the contract is exact. */
   /** The reusable core of x71 over any (basket, item) frame: pair
-    * co-occurrence counts with the hot-basket cap applied BEFORE the
-    * self-join (a basket with > `basketCap` distinct items contributes
-    * zero pairs instead of a quadratic blow-up). */
+    * co-occurrence counts with the hot-basket cap (a basket with
+    * > `basketCap` distinct items contributes zero pairs instead of a
+    * quadratic blow-up). */
   def coOccurrencePairs(bi: DataFrame, basketCap: Int,
       minBaskets: Long): DataFrame =
-    pairsFromCapped(cappedBaskets(bi, basketCap), minBaskets)
+    pairsFromBaskets(basketItems(bi, basketCap), minBaskets)
 
-  /** The distinct (basket, item) frame with the hot-basket cap applied
-    * (round-16 refactor: the capped frame and the pair generation are
-    * separable so shared memos can reuse each stage). */
-  private[operators] def cappedBaskets(bi: DataFrame,
-      basketCap: Int): DataFrame = {
-    val li = bi.select(col("basket"), col("item")).distinct()
-    val ok = li.groupBy(col("basket"))
-      .agg(count(lit(1)).as("sz")).filter(col("sz") <= basketCap)
-      .select(col("basket"))
-    li.join(ok, "basket")
-  }
+  /** One row per basket with at most `cap` distinct items: `basket`
+    * and `items`, its distinct non-null items sorted ascending — one
+    * shuffle on the basket. Nulls keep the row form's meaning (SQL's
+    * DISTINCT, COUNT(*) per basket, JOIN USING): a null item counts as
+    * one distinct item toward the cap but is not in `items`, so it
+    * never pairs, and a basket whose only item is null stays with an
+    * empty array (the row count is the qualifying-basket count); a
+    * null basket is no basket. */
+  private[graft] def basketItems(bi: DataFrame, cap: Int): DataFrame =
+    bi.filter(col("basket").isNotNull)
+      .groupBy(col("basket"))
+      .agg(array_sort(collect_set(col("item"))).as("items"),
+        max(col("item").isNull.cast("int")).as("null_item"))
+      .filter(size(col("items")) + col("null_item") <= cap)
+      .select(col("basket"), col("items"))
 
-  private[operators] def pairsFromCapped(l2: DataFrame,
+  /** Pair supports over [[basketItems]] rows: every `part_a < part_b`
+    * pair of a basket comes out of its own row (the item at position
+    * `pos` pairs with the slice after it — the array is sorted and
+    * distinct), then one pair aggregate and the support filter. */
+  private[graft] def pairsFromBaskets(baskets: DataFrame,
       minBaskets: Long): DataFrame =
-    l2.select(col("basket"), col("item").as("part_a"))
-      .join(l2.select(col("basket"), col("item").as("part_b")), "basket")
-      .filter(col("part_a") < col("part_b"))
+    baskets
+      .select(col("items"), posexplode(col("items")).as(Seq("pos", "part_a")))
+      .select(col("part_a"), explode(slice(col("items"), col("pos") + 2,
+        size(col("items")) - col("pos") - 1)).as("part_b"))
       .groupBy(col("part_a"), col("part_b"))
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= minBaskets)
 
-  /** The capped (≤50 distinct parts) ORDER-basket frame, built once per
-    * (session, corpus) — round-16 optimization: x71 and x142 each
-    * rebuilt this distinct + cap + join (x142 twice: once inline for
-    * supports, once inside its pair call); one lineage-cut memo now
-    * serves every consumer, exactly like the customer-grain
-    * [[custBasketsShared]] below. */
+  /** The capped (≤50 distinct parts) ORDER baskets in array form, built
+    * once per (session, corpus) as one lineage-cut memo that serves
+    * every consumer: x71's pairs, and x142's pairs, basket count (the
+    * row count) and item supports (one explode + aggregate). */
   private[graft] def orderBasketsShared(spark: SparkSession,
       sfDir: String): DataFrame =
     graft.Memo(spark, s"order_baskets:$sfDir") {
-      graft.Checkpoints.cut(cappedBaskets(
+      graft.Checkpoints.cut(basketItems(
         Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey").as("basket"),
-            col("l_partkey").as("item")), basketCap = 50))
+            col("l_partkey").as("item")), cap = 50))
     }
 
   /** Pair supports at the shared ≥2 lower bound over the shared order
     * baskets (round-16): x71 reads it outright, x142 filters to its ≥3
-    * operating point — the expensive basket self-join runs once per
-    * session instead of twice. */
+    * operating point — the pair enumeration and its aggregate run once
+    * per session instead of twice; the 50-part cap bounds each order
+    * row's share of it to C(50, 2) pairs. */
   private[graft] def orderPairs2Shared(spark: SparkSession,
       sfDir: String): DataFrame =
     graft.Memo(spark, s"order_pairs2:$sfDir") {
       graft.Checkpoints.cut(
-        pairsFromCapped(orderBasketsShared(spark, sfDir), minBaskets = 2L))
+        pairsFromBaskets(orderBasketsShared(spark, sfDir), minBaskets = 2L))
     }
 
   def x71CoPurchase(spark: SparkSession, sfDir: String): DataFrame =
@@ -97,22 +109,22 @@ object BasketOps {
     * "customers who bought A also bought B" readout with the
     * statistics that separate real affinity from popularity.
     *
-    * Reuses x71's coOccurrencePairs core (basket cap 50 applied BEFORE
-    * the self-join, so a mega-order cannot explode the pair stream);
-    * item supports come off the SAME capped basket set, so
+    * Reuses x71's pair kernel (basket cap 50, so one order emits at
+    * most C(50, 2) pairs and a mega-order cannot explode the pair
+    * stream); item supports come off the SAME capped basket set, so
     * support/confidence/lift are mutually consistent. All three
     * ratios are single IEEE divisions of exact BIGINT products,
     * rounded to 6 dp — no float accumulation anywhere. */
   def x142AssocRules(spark: SparkSession, sfDir: String): DataFrame = {
-    // round 16: supports, basket count, and pairs all come off the
-    // SHARED capped order-basket memo (x71's frame) — the ≥3 pair set
-    // is exactly the shared ≥2 set filtered, and the qualifying-basket
-    // count is the capped frame's distinct baskets (identical to the
-    // pre-r16 inline ok-count by construction).
-    val capped = orderBasketsShared(spark, sfDir)
-    val nBaskets = capped.select(col("basket")).distinct()
-      .agg(count(lit(1)).as("n_total"))
-    val itemN = capped.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
+    // supports, basket count, and pairs all come off the SHARED capped
+    // order-basket memo (x71's frame): the ≥3 pair set is exactly the
+    // shared ≥2 set filtered, the qualifying-basket count is the array
+    // frame's row count (one row per basket, so no distinct), and the
+    // item supports are one explode + aggregate over the same rows.
+    val baskets = orderBasketsShared(spark, sfDir)
+    val nBaskets = baskets.agg(count(lit(1)).as("n_total"))
+    val itemN = baskets.select(explode(col("items")).as("item"))
+      .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
     val pairs = orderPairs2Shared(spark, sfDir)
       .filter(col("n_orders") >= 3L)
     val rules = pairs.select(col("part_a").as("antecedent"),
@@ -179,9 +191,9 @@ object BasketOps {
     * sim(a,b) = n_ab / √(n_a·n_b) — one integer product, one IEEE
     * sqrt (correctly rounded by the 754 contract in both engines),
     * one division, round 6 dp. Pair generation reuses
-    * coOccurrencePairs keyed by customer with a 64-part history cap —
-    * sized to the self-join lint bound, so the hottest basket bucket
-    * provably fits one task (same visible-guard pattern as x71/x33). */
+    * coOccurrencePairs keyed by customer with a 64-part history cap, so
+    * one customer row emits at most C(64, 2) = 2016 pairs (same
+    * visible-guard pattern as x71/x33). */
   /** The capped (≤64 distinct parts) customer-basket frame, built once
     * per (session, corpus): x144's item-item CF and x160's Apriori
     * triples read the SAME basket grain, so the lineitem⋈orders
@@ -202,7 +214,7 @@ object BasketOps {
     }
 
   /** Co-occurrence pair supports at the SHARED lower bound (≥2) over
-    * the shared customer baskets — the expensive basket self-join,
+    * the shared customer baskets — the pair kernel's output,
     * materialized once per session AND staged cross-process (the
     * lpalabels pattern): x144 filters it to its ≥3 operating point,
     * x160 generates triple candidates from it directly, and a later

@@ -126,11 +126,11 @@ object WarehouseOps {
         sum(col("o_totalprice").cast(Det.Money)).as("total"))
     val baseDir = Paths.get(Tables.scratchDir("x54base", sfDir))
     val marker = baseDir.resolve("_agg_from_src")
-    // content fingerprint: size + mtime — a regenerated corpus of
-    // identical byte size still invalidates the persisted base agg
-    // (ADVICE r6), so a stale cut can never serve silently
-    val src = Paths.get(s"$sfDir/orders.parquet")
-    val srcFp = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"
+    // content fingerprint: each data file's size + mtime — a
+    // regenerated corpus of identical byte size still invalidates the
+    // persisted base agg (ADVICE r6), so a stale cut can never serve
+    // silently
+    val srcFp = Tables.corpusFingerprint(sfDir, "orders")
     val dataDir = baseDir.resolve("agg").toString
     if (!Files.exists(marker) || Files.readString(marker) != srcFp) {
       aggOf(o.filter(col("o_orderdate") < lit(cut)))

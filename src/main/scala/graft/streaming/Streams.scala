@@ -368,11 +368,10 @@ object Streams {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     // the split is a pure function of events.parquet — reuse it across
-    // runs (marker records the source size; relative mtimes persist)
-    val marker = dir.resolve("_staged_from_size")
-    val srcSize = Files.size(Paths.get(s"$sfDir/events.parquet"))
-    if (Files.exists(marker) &&
-        Files.readString(marker) == srcSize.toString &&
+    // runs (marker records the source fingerprint; relative mtimes persist)
+    val marker = dir.resolve("_staged_from_src")
+    val fp = Tables.corpusFingerprint(sfDir, "events")
+    if (Files.exists(marker) && Files.readString(marker) == fp &&
         (0 to 2).forall(i => Files.exists(dir.resolve(s"batch$i.parquet")))) {
       return dir.toString
     }
@@ -399,7 +398,7 @@ object Streams {
     writeOne(ev.filter(col("ts_us") <= cut1 && col("ts_us") > cut2)
       .drop("ts_us"), "batch1", 10L)
     writeOne(ev.filter(col("ts_us") <= cut2).drop("ts_us"), "batch2", 20L)
-    Files.writeString(marker, srcSize.toString)
+    Files.writeString(marker, fp)
     dir.toString
   }
 
@@ -614,10 +613,9 @@ object Streams {
     val dir = Paths.get(Tables.scratchDir("stream_outer", sfDir))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val marker = dir.resolve("_staged_from_size")
-    val srcSize = Files.size(Paths.get(s"$sfDir/events.parquet"))
-    if (Files.exists(marker) &&
-        Files.readString(marker) == srcSize.toString &&
+    val marker = dir.resolve("_staged_from_src")
+    val fp = Tables.corpusFingerprint(sfDir, "events")
+    if (Files.exists(marker) && Files.readString(marker) == fp &&
         Files.exists(dir.resolve("batch0.parquet")) &&
         (1 to 2).forall(i => Files.exists(dir.resolve(s"sentinel$i.parquet")))) {
       return dir.toString
@@ -646,7 +644,7 @@ object Streams {
     writeOne(ev, "batch0", 0L)
     writeOne(sentinel(-1L, 3L), "sentinel1", 10L)
     writeOne(sentinel(-3L, 4L), "sentinel2", 20L)
-    Files.writeString(marker, srcSize.toString)
+    Files.writeString(marker, fp)
     dir.toString
   }
 
@@ -982,10 +980,8 @@ object Streams {
   private def stageProbeDocs(spark: SparkSession, sfDir: String): String = {
     val s = Tables.tune(spark)
     val dir = Paths.get(Tables.scratchDir("stream_docs", sfDir))
-    val docsSrc = Paths.get(s"$sfDir/documents.parquet")
     val marker = dir.resolve("_staged_from_src")
-    val fp = s"${Files.size(docsSrc)}:" +
-      s"${Files.getLastModifiedTime(docsSrc).toMillis}"
+    val fp = Tables.corpusFingerprint(sfDir, "documents")
     if (!(Files.exists(marker) && Files.readString(marker) == fp &&
         (0 to 1).forall(i => Files.exists(dir.resolve(s"docs_$i.parquet"))))) {
       val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1018,10 +1014,8 @@ object Streams {
   private def stageProbeVecs(spark: SparkSession, sfDir: String): String = {
     val s = Tables.tune(spark)
     val dir = Paths.get(Tables.scratchDir("stream_vecs", sfDir))
-    val src = Paths.get(s"$sfDir/embeddings.parquet")
     val marker = dir.resolve("_staged_from_src")
-    val fp = s"${Files.size(src)}:" +
-      s"${Files.getLastModifiedTime(src).toMillis}"
+    val fp = Tables.corpusFingerprint(sfDir, "embeddings")
     if (!(Files.exists(marker) && Files.readString(marker) == fp &&
         (0 to 1).forall(i => Files.exists(dir.resolve(s"vecs_$i.parquet"))))) {
       val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -87,10 +87,10 @@ class Extras9Spec extends SparkSpec {
 
   test("x71: the expensive basket shuffles compute once — one shared " +
       "materialized pair build per session (round 16), and the memo-free " +
-      "API path still reuses the self-join's exchanges") {
+      "API path pairs inside basket rows: no join, two exchanges") {
     // round 16: x71/x142 serve from ONE memoized, lineage-cut pair
-    // frame (sharing by materialization — stronger than within-plan
-    // exchange reuse, and it spans QUERIES, not just join sides)
+    // frame (sharing by materialization — it spans QUERIES, not just
+    // the sides of one plan)
     val p1 = graft.operators.BasketOps.orderPairs2Shared(spark, sf)
     val p2 = graft.operators.BasketOps.orderPairs2Shared(spark, sf)
     assert(p1 eq p2, "one pair build per (session, corpus)")
@@ -98,19 +98,33 @@ class Extras9Spec extends SparkSpec {
       case r: org.apache.spark.sql.execution.RDDScanExec => r
     }
     assert(scans.nonEmpty, "pairs serve from a materialized checkpoint")
-    // the public per-call API (no memo) keeps the pre-r16 property:
-    // AQE reuses the distinct/guard exchanges across the self-join
+    // the public per-call API (no memo): each basket's pairs come out of
+    // its own sorted item array, so the plan has no join at all and
+    // shuffles twice — once on the basket, once on the pair
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val df = graft.operators.BasketOps.coOccurrencePairs(
       Tables.lineitem(spark, sf).select(
         org.apache.spark.sql.functions.col("l_orderkey").as("basket"),
         org.apache.spark.sql.functions.col("l_partkey").as("item")),
       basketCap = 50, minBaskets = 2L)
     df.collect()
-    val reused = flattenPlan(df.queryExecution.executedPlan).collect {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    val plan = flattenPlan(df.queryExecution.executedPlan)
+    val joins = plan.collect { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"the pair kernel must not join: $joins")
+    val keys = plan.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map {
+          case a: AttributeReference => a.name
+          case x => x.sql
+        }
+        case other => Seq(other.toString)
+      }
     }
-    assert(reused.nonEmpty,
-      "expected exchange reuse across the self-join's two sides")
+    assert(keys.toSet == Set(Seq("basket"), Seq("part_a", "part_b")) &&
+      keys.size == 2, s"expected one basket and one pair shuffle: $keys")
   }
 
   test("x71 core: a hot basket above the cap contributes zero pairs") {

@@ -23,6 +23,8 @@ import graft.operators.{BasketOps, GraphOps, TextOps}
   *     and are unchanged on the single-file corpora.
   *  4. LINT: no main source outside Tables.scala hand-builds a corpus
   *     read, which would bring the schema-inference job back.
+  *  5. FINGERPRINT: the staleness fingerprint reads every data file, so
+  *     rewriting one part of a directory table changes it.
   */
 class TablesSpec extends SparkSpec {
 
@@ -118,6 +120,32 @@ class TablesSpec extends SparkSpec {
     f.getParentFile.mkdirs()
     val raf = new RandomAccessFile(f, "rw")
     try raf.setLength(bytes) finally raf.close()
+  }
+
+  test("corpus fingerprint: rewriting one part of a directory corpus changes it") {
+    val base = Files.createTempDirectory("graft_tables_fp").toFile
+    try {
+      val d = base.getAbsolutePath
+      val dir = Paths.get(s"$d/orders.parquet")
+      Tables.orders(spark, sf).repartition(3).write.parquet(dir.toString)
+      def entry = s"${Files.size(dir)}:${Files.getLastModifiedTime(dir).toMillis}"
+      val before = Tables.corpusFingerprint(d, "orders")
+      val entryBefore = entry
+      assert(Tables.corpusFingerprint(d, "orders") == before, "stable")
+      // rewrite one part in place, one byte longer: the directory entry
+      // (what a fingerprint of the path alone reads) does not move
+      val part = Tables.dataFiles(d, "orders")(1)
+      Files.write(part, Files.readAllBytes(part) :+ 0.toByte)
+      assert(entry == entryBefore)
+      val after = Tables.corpusFingerprint(d, "orders")
+      assert(after != before, s"$before -> $after")
+      assert(Tables.sharedDir("t", d, after) != Tables.sharedDir("t", d, before))
+      // single-file tables fingerprint their one file
+      val one = Paths.get(s"$sf/orders.parquet")
+      assert(Tables.corpusFingerprint(sf, "orders") ==
+        s"orders.parquet:${Files.size(one)}:" +
+          s"${Files.getLastModifiedTime(one).toMillis}")
+    } finally rm(base)
   }
 
   test("width helpers sum a directory table's part files") {
