@@ -171,19 +171,10 @@ object Graph {
     val adj = o.groupBy(col("src"))
       .agg(sort_array(collect_list(struct(col("dst_deg").as("d"),
         col("dst").as("v")))).as("ns"))
-    // Round-16 optimization A/B (ProbeTri, 41M wedge pairs, alternating
-    // reps in one JVM): a single-explode higher-order spelling
-    // (explode(flatten(transform(transform(slice)))), building each
-    // node's full pair array) measured ~2x SLOWER (4.5 s vs 2.3 s per
-    // closing pass) than this double posexplode — the generators
-    // stream pairs through whole-stage codegen without materializing
-    // the per-node pair array, and the "array copied per row" worry
-    // does not dominate at O(√m)-bounded out-degrees. Kept as-is;
-    // measured rejection recorded in OPTIMIZATION_r16.md.
-    val w = adj
-      .select(col("ns"), posexplode(col("ns")).as(Seq("i", "xs")))
-      .select(col("i"), col("xs"), posexplode(col("ns")).as(Seq("j", "ys")))
-      .filter(col("j") > col("i"))
+    // each node's wedges are the in-row pairs of its rank-sorted
+    // out-neighbourhood, from the one pair enumerator the basket kernels
+    // use (its A/B against a slice spelling is on BasketOps.arrayPairs)
+    val w = graft.operators.BasketOps.arrayPairs(adj, "ns", "xs", "ys")
       .select(col("xs.v").as("x"), col("ys.v").as("y"))
     val wf =
       if (closeBloomItems > 0L) {

@@ -8,10 +8,11 @@ import graft.{Det, Tables}
 /** MARKET-BASKET / SEQUENCE-MINING theme module (round 11 — the
   * ExtrasN naming-debt retirement, VERDICT r10 #7): the co-occurrence
   * miners over order baskets and event streams, moved verbatim from
-  * Extras9/13/16. All pair generation flows through ONE array-form
-  * kernel ([[basketItems]] then [[pairsFromBaskets]]): each basket is
-  * one row holding its sorted distinct items, and its pairs are
-  * enumerated inside that row — no basket self-join. The basket caps
+  * Extras9/13/16. Every basket is ONE row holding its sorted distinct
+  * items ([[basketItems]], the only place a basket cap is applied), and
+  * every pair comes out of its own row through [[arrayPairs]] — the one
+  * in-row pair enumerator, shared with the co-purchase edge build and
+  * the triangle-census wedges. No basket self-join anywhere. The caps
   * still matter: one basket row emits C(cap, 2) pairs at most, so a
   * mega-basket cannot explode the pair stream. The customer-grain pair
   * table is also staged cross-process.
@@ -23,16 +24,6 @@ object BasketOps {
 
   import Det.{sql => d}
 
-  /** X71 — market-basket co-occurrence (parts bought together): pairs
-    * of parts sharing ≥ 2 orders, top-100. Each order is one row of
-    * its sorted distinct parts and its pairs are enumerated in that
-    * row, so the pair stream costs one shuffle on the order key and
-    * one on the pair. The hot-basket guard (orders with > 50 distinct
-    * parts contribute no pairs) bounds what one order row emits to
-    * C(50, 2) = 1225 pairs — a pathological mega-order cannot
-    * quadratically explode the pair stream. The guard is the graph
-    * form of x33/x41's hot-key cap; the oracle applies the identical
-    * cap so the contract is exact. */
   /** The reusable core of x71 over any (basket, item) frame: pair
     * co-occurrence counts with the hot-basket cap (a basket with
     * > `basketCap` distinct items contributes zero pairs instead of a
@@ -57,16 +48,33 @@ object BasketOps {
       .filter(size(col("items")) + col("null_item") <= cap)
       .select(col("basket"), col("items"))
 
+  /** The one in-row pair enumerator: for each row of `rows`, every
+    * (x, y) pair of elements of its array column `arr` with x at an
+    * earlier position than y, and no self-join. Two generators stream
+    * the n² position pairs of an array of n through whole-stage
+    * codegen and `j > i` keeps half; no per-row array is built. Over a
+    * sorted distinct array that is every `x < y` pair once; over
+    * rank-sorted adjacency structs it is every wedge once. Empty and
+    * one-element arrays emit nothing. A posexplode + explode(slice)
+    * spelling (n²/2 rows, one array copy per element) was A/B'd
+    * against it on 4 CPUs at sf0.1: x112 task CPU median 18.3 vs
+    * 17.1 s (5 alternating rounds; this form lower in 8 of 11 pairs)
+    * and timed x71/x142 `pipeline` cpu_s 13.4 vs 13.3 s (6 pairs, 3
+    * each) — this form is kept. */
+  private[graft] def arrayPairs(rows: DataFrame, arr: String, x: String,
+      y: String): DataFrame =
+    rows.select(col(arr), posexplode(col(arr)).as(Seq("i", x)))
+      .select(col("i"), col(x), posexplode(col(arr)).as(Seq("j", y)))
+      .filter(col("j") > col("i"))
+      .select(col(x), col(y))
+
   /** Pair supports over [[basketItems]] rows: every `part_a < part_b`
-    * pair of a basket comes out of its own row (the item at position
-    * `pos` pairs with the slice after it — the array is sorted and
-    * distinct), then one pair aggregate and the support filter. */
+    * pair of a basket comes out of its own row ([[arrayPairs]] over the
+    * sorted distinct items), then one pair aggregate and the support
+    * filter. */
   private[graft] def pairsFromBaskets(baskets: DataFrame,
       minBaskets: Long): DataFrame =
-    baskets
-      .select(col("items"), posexplode(col("items")).as(Seq("pos", "part_a")))
-      .select(col("part_a"), explode(slice(col("items"), col("pos") + 2,
-        size(col("items")) - col("pos") - 1)).as("part_b"))
+    arrayPairs(baskets, "items", "part_a", "part_b")
       .groupBy(col("part_a"), col("part_b"))
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= minBaskets)
@@ -96,6 +104,16 @@ object BasketOps {
         pairsFromBaskets(orderBasketsShared(spark, sfDir), minBaskets = 2L))
     }
 
+  /** X71 — market-basket co-occurrence (parts bought together): pairs
+    * of parts sharing ≥ 2 orders, top-100. Each order is one row of
+    * its sorted distinct parts and its pairs are enumerated in that
+    * row, so the pair stream costs one shuffle on the order key and
+    * one on the pair. The hot-basket guard (orders with > 50 distinct
+    * parts contribute no pairs) bounds what one order row emits to
+    * C(50, 2) = 1225 pairs — a pathological mega-order cannot
+    * quadratically explode the pair stream. The guard is the graph
+    * form of x33/x41's hot-key cap; the oracle applies the identical
+    * cap so the contract is exact. */
   def x71CoPurchase(spark: SparkSession, sfDir: String): DataFrame =
     orderPairs2Shared(spark, sfDir)
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
@@ -181,36 +199,27 @@ object BasketOps {
 
   // ---------------------------------------------------------------- x144
 
-  /** X144 — item-item collaborative filtering (Sarwar WWW'01): cosine
-    * similarity between parts over their DISTINCT-CUSTOMER purchase
-    * sets (binary ratings), top-20 pairs — the "similar items" model
-    * behind every recommendation shelf. Differs from x142's basket
-    * rules in grain (a customer's whole history, not one order) and
-    * metric (symmetric cosine, not directed confidence).
-    *
-    * sim(a,b) = n_ab / √(n_a·n_b) — one integer product, one IEEE
-    * sqrt (correctly rounded by the 754 contract in both engines),
-    * one division, round 6 dp. Pair generation reuses
-    * coOccurrencePairs keyed by customer with a 64-part history cap, so
-    * one customer row emits at most C(64, 2) = 2016 pairs (same
-    * visible-guard pattern as x71/x33). */
-  /** The capped (≤64 distinct parts) customer-basket frame, built once
-    * per (session, corpus): x144's item-item CF and x160's Apriori
-    * triples read the SAME basket grain, so the lineitem⋈orders
-    * distinct + cap shuffles run once per pass (on a cluster this is
-    * the persisted `customer_baskets` staging table both jobs scan). */
-  def custBasketsShared(spark: SparkSession, sfDir: String): DataFrame =
+  /** The capped (≤64 distinct parts) CUSTOMER baskets in array form
+    * (lineitem ⋈ orders keyed by customer), built once per (session,
+    * corpus) as one lineage-cut memo — the same shape as
+    * [[orderBasketsShared]]: x144's item supports and x160's
+    * (basket, item) rows are one explode of it, and the shared pair
+    * table is [[pairsFromBaskets]] over it. The cut runs AQE-off at
+    * fact-proportional width: under AQE the ~15k customer rows of sf0.1
+    * coalesced into ONE partition, so the pair enumeration over them
+    * (up to C(64, 2) pairs per row) ran as one 9 s task. */
+  private[graft] def custBasketsShared(spark: SparkSession,
+      sfDir: String): DataFrame =
     graft.Memo(spark, s"cust_baskets:$sfDir") {
-      val cp = Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey"), col("l_partkey").as("item"))
-        .join(Tables.orders(spark, sfDir)
-          .select(col("o_orderkey"), col("o_custkey").as("basket")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("basket"), col("item"))
-        .distinct()
-      val ok = cp.groupBy(col("basket")).agg(count(lit(1)).as("sz"))
-        .filter(col("sz") <= 64).select(col("basket"))
-      graft.Checkpoints.cut(cp.join(ok, "basket"))
+      graft.Checkpoints.withAqeOff(spark, factWidth(sfDir)) {
+        graft.Checkpoints.cut(basketItems(
+          Tables.lineitem(spark, sfDir)
+            .select(col("l_orderkey"), col("l_partkey").as("item"))
+            .join(Tables.orders(spark, sfDir)
+              .select(col("o_orderkey"), col("o_custkey").as("basket")),
+              col("l_orderkey") === col("o_orderkey"))
+            .select(col("basket"), col("item")), cap = 64))
+      }
     }
 
   /** Co-occurrence pair supports at the SHARED lower bound (≥2) over
@@ -227,8 +236,7 @@ object BasketOps {
         Tables.corpusFingerprint(sfDir, "orders") + "|custpairs2"
       val home = Tables.sharedDir("custpairs2", sfDir, fp)
       if (!home.isDirectory) {
-        val pairs = graft.operators.BasketOps.coOccurrencePairs(
-          custBasketsShared(spark, sfDir), basketCap = 64,
+        val pairs = pairsFromBaskets(custBasketsShared(spark, sfDir),
           minBaskets = 2L)
         val tmp = Tables.sharedBuildDir(home)
         pairs.write.mode("overwrite").parquet(tmp.getAbsolutePath)
@@ -237,9 +245,24 @@ object BasketOps {
       s.read.parquet(home.getAbsolutePath)
     }
 
+  /** X144 — item-item collaborative filtering (Sarwar WWW'01): cosine
+    * similarity between parts over their DISTINCT-CUSTOMER purchase
+    * sets (binary ratings), top-20 pairs — the "similar items" model
+    * behind every recommendation shelf. Differs from x142's basket
+    * rules in grain (a customer's whole history, not one order) and
+    * metric (symmetric cosine, not directed confidence).
+    *
+    * sim(a,b) = n_ab / √(n_a·n_b) — one integer product, one IEEE
+    * sqrt (correctly rounded by the 754 contract in both engines),
+    * one division, round 6 dp. Pairs and item supports both come off
+    * the shared customer baskets (64-part history cap, so one customer
+    * row emits at most C(64, 2) = 2016 pairs — the x71/x33 visible
+    * guard): the pairs through the staged ≥2 pair table, the supports
+    * as one explode + aggregate, as x142's. */
   def x144ItemCf(spark: SparkSession, sfDir: String): DataFrame = {
-    val capped = custBasketsShared(spark, sfDir)
-    val itemN = capped.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
+    val itemN = custBasketsShared(spark, sfDir)
+      .select(explode(col("items")).as("item"))
+      .groupBy(col("item")).agg(count(lit(1)).as("n_item"))
     custPairs2Shared(spark, sfDir).filter(col("n_orders") >= 3)
       .select(col("part_a"), col("part_b"), col("n_orders").as("n_both"))
       .join(itemN.select(col("item").as("part_a"),
@@ -352,7 +375,8 @@ object BasketOps {
     * triple-self-joined (the oracle does exactly that: same answer,
     * cubic-vs-pruned different plan). */
   def x160Apriori3(spark: SparkSession, sfDir: String): DataFrame = {
-    val capped = graft.operators.BasketOps.custBasketsShared(spark, sfDir)
+    val capped = custBasketsShared(spark, sfDir)
+      .select(col("basket"), explode(col("items")).as("item"))
     val freq = capped.groupBy(col("item")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select(col("item"))
     // round 17 (guide §2.4): `fi` is referenced FIVE times across the
@@ -368,7 +392,7 @@ object BasketOps {
           capped.join(freq, "item").select(col("basket"), col("item")))
       }
     }
-    val pairs = graft.operators.BasketOps.custPairs2Shared(spark, sfDir)
+    val pairs = custPairs2Shared(spark, sfDir)
       .select(col("part_a"), col("part_b"))
     val hot = pairs.groupBy(col("part_a")).agg(count(lit(1)).as("d"))
       .filter(col("d") > 64).select(col("part_a").as("hi"))

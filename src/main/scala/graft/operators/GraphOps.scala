@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.Checkpoints.withAqeOff
 
@@ -292,13 +291,13 @@ object GraphOps {
     * whether co-purchase structure is cliquey (bundles) or hub-like
     * (one staple in every basket).
     *
-    * Scale shape: edges come from a SELF-JOIN KEYED BY ORDER (per-order
-    * fan-out is basket-size-bounded, never corpus-bounded); the
-    * triangle closure runs DEGREE-ORIENTED (Chiba–Nishizeki — see
-    * [[triangleCensus]]): each edge points from its lower-(deg, id)
-    * endpoint to the higher, out-neighborhoods are O(√m)-bounded
-    * adjacency arrays, and wedge pairs stream out of a generator into
-    * one equi-join against the oriented edge list — each triangle
+    * Scale shape: edges are enumerated INSIDE each order's sorted part
+    * array (see [[coPurchaseEdgeFrame]]; per-order fan-out is
+    * basket-size-bounded, never corpus-bounded); the triangle closure
+    * runs DEGREE-ORIENTED (Chiba–Nishizeki — see [[triangleCensus]]):
+    * each edge points from its lower-(deg, id) endpoint to the higher,
+    * out-neighborhoods are O(√m)-bounded adjacency arrays, and wedge
+    * pairs stream out of the same in-row enumerator into one equi-join against the oriented edge list — each triangle
     * counted exactly once from its minimum-rank vertex (PlanLint's
     * self-join-hot-key rule rejected the naive id orientation on this
     * very corpus). Wedges are pure integer arithmetic off the degree
@@ -319,18 +318,18 @@ object GraphOps {
         edgeRows else 0L)
   }
 
-  /** The canonical (a < b) co-purchase part edge set, memoized per
-    * (session, corpus) AND staged cross-session under the shared root
-    * (the x111-adjacency pattern): x112's census and x136's k-core
-    * peel share one build, and a LATER PROCESS reloads the staged
-    * parquet instead of re-running the order-keyed self-join +
-    * distinct (~2/3 of either consumer's cold line). */
   /** Home dir of the staged co-purchase edge set (fingerprint-named). */
   private def copurchaseHome(sfDir: String): java.io.File = {
     val fp = Tables.corpusFingerprint(sfDir, "lineitem") + "|copurch"
     Tables.sharedDir("copurchase", sfDir, fp)
   }
 
+  /** The canonical (a < b) co-purchase part edge set, memoized per
+    * (session, corpus) AND staged cross-session under the shared root
+    * (the x111-adjacency pattern): x112's census, x136's k-core peel
+    * and x137/x141's label propagation share one build, and a LATER
+    * PROCESS reloads the staged parquet instead of re-running
+    * [[coPurchaseEdgeFrame]]. */
   private[operators] def coPurchaseEdges(spark: SparkSession,
       sfDir: String): DataFrame =
     graft.Memo(spark, s"copurchase:$sfDir") {
@@ -339,19 +338,27 @@ object GraphOps {
       // round 17: build AQE-off at fact-proportional width — one job
       // instead of one per exchange stage; same rows
       if (!home.isDirectory) withAqeOff(spark, adjBuckets(sfDir)) {
-        val li = Tables.lineitem(spark, sfDir)
-          .select(col("l_orderkey"), col("l_partkey"))
-        val edges = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-          .distinct()
+        val edges = coPurchaseEdgeFrame(Tables.lineitem(spark, sfDir))
         val tmp = Tables.sharedBuildDir(home)
         edges.write.mode("overwrite").parquet(tmp.getAbsolutePath)
         Tables.publishShared(tmp, home)
       }
       s.read.parquet(home.getAbsolutePath)
     }
+
+  /** The distinct (a < b) pairs of parts sharing an order, over
+    * (l_orderkey, l_partkey) rows: each order becomes one row of its
+    * sorted distinct parts ([[BasketOps.basketItems]], no cap — the
+    * graph keeps every order), its pairs come out of that row
+    * ([[BasketOps.arrayPairs]]), and one `distinct` merges the orders.
+    * No join: one shuffle on the order key, one on the pair. A null
+    * order or a null part never pairs. */
+  private[graft] def coPurchaseEdgeFrame(li: DataFrame): DataFrame =
+    BasketOps.arrayPairs(BasketOps.basketItems(
+        li.select(col("l_orderkey").as("basket"),
+          col("l_partkey").as("item")), cap = Int.MaxValue),
+        "items", "a", "b")
+      .distinct()
 
   /** The census core over a canonical (a < b) undirected edge list;
     * see [[x112Triangles]]. Exposed for spec-level hand-checks.
@@ -562,9 +569,6 @@ object GraphOps {
       .filter(col("rn") <= 10).drop("rn")
       .orderBy(col("kind"), col("score").desc, col("node"))
   }
-
-  private def dec(c: org.apache.spark.sql.Column) =
-    sum(c.cast(DecimalType(28, 15))).cast("double")
 
   /** The HITS iteration core over a directed (s, c) edge list; returns
     * the union of hub and authority scores as (kind, node, score).

@@ -3,19 +3,26 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.BasketOps
+import graft.operators.{BasketOps, GraphOps}
 
-/** The array-form basket kernel ([[BasketOps.basketItems]] then
-  * [[BasketOps.pairsFromBaskets]]) pinned bit-for-bit to the plain
-  * row-form spelling it replaced — DISTINCT (basket, item) rows, a
-  * COUNT(*) cap per basket joined back, and a basket-keyed self-join
-  * for the pairs, the shape of the DuckDB oracles. That reference
-  * lives only here.
+/** The array-form basket kernel ([[BasketOps.basketItems]], then the
+  * one in-row pair enumerator [[BasketOps.arrayPairs]]) pinned
+  * bit-for-bit to the plain spellings it replaced — DISTINCT (basket,
+  * item) rows, a COUNT(*) cap per basket joined back, and a
+  * basket-keyed self-join for the pairs (the shape of the DuckDB
+  * oracles); the order-keyed lineitem self-join + DISTINCT for the
+  * co-purchase edges; posexplode + explode(slice(...)), the in-row
+  * spelling the basket pairs used before the enumerator. Those
+  * references live only here.
   *
   *  1. CORPUS PARITY at sf0.01: the shared order pair frame, x71 and
-  *     x142 row for row, and the shared customer pair frame.
+  *     x142 row for row, the shared customer pair frame, x144 and x160
+  *     row for row, and the co-purchase edge set (plus its plan: no
+  *     join, one shuffle on the order key).
   *  2. PLANTED CASES: duplicated lines, baskets at the cap and one
-  *     over it, string items, null items and null baskets.
+  *     over it, string items, null items and null baskets; single-part
+  *     and null orders for the edges; empty, one-element and tied
+  *     struct arrays for the enumerator.
   */
 class BasketKernelSpec extends SparkSpec {
 
@@ -41,6 +48,77 @@ class BasketKernelSpec extends SparkSpec {
   private def orderItems(sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("basket"), col("l_partkey").as("item"))
+
+  /** (customer, part) rows of lineitem ⋈ orders — raw, uncapped. */
+  private def custItems(sfDir: String): DataFrame =
+    Tables.lineitem(spark, sfDir)
+      .join(Tables.orders(spark, sfDir),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("basket"), col("l_partkey").as("item"))
+
+  private def refEdges(li: DataFrame): DataFrame =
+    li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      .distinct()
+
+  private def refX144(sfDir: String): DataFrame = {
+    val capped = refCapped(custItems(sfDir), 64)
+    val itemN = capped.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
+    refPairs(capped, 3L)
+      .select(col("part_a"), col("part_b"), col("n_orders").as("n_both"))
+      .join(itemN.select(col("item").as("part_a"),
+        col("n_item").as("n_a")), "part_a")
+      .join(itemN.select(col("item").as("part_b"),
+        col("n_item").as("n_b")), "part_b")
+      .select(col("part_a"), col("part_b"), col("n_both"), col("n_a"),
+        col("n_b"),
+        round(col("n_both").cast("double") /
+          sqrt((col("n_a") * col("n_b")).cast("double")), 6).as("sim"))
+      .orderBy(col("sim").desc, col("part_a"), col("part_b"))
+      .limit(20)
+  }
+
+  /** x160 as it read over row-form baskets and row-form pairs: the
+    * hot/cold Apriori split verbatim, fed by the reference cap. */
+  private def refX160(sfDir: String): DataFrame = {
+    val capped = refCapped(custItems(sfDir), 64)
+    val freq = capped.groupBy(col("item")).agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2).select(col("item"))
+    val fi = capped.join(freq, "item").select(col("basket"), col("item"))
+    val pairs = refPairs(capped, 2L).select(col("part_a"), col("part_b"))
+    val hot = pairs.groupBy(col("part_a")).agg(count(lit(1)).as("d"))
+      .filter(col("d") > 64).select(col("part_a").as("hi"))
+    val cold = pairs.join(broadcast(hot), col("part_a") === col("hi"),
+      "left_anti")
+    val cand = cold.select(col("part_a").as("i1"), col("part_b").as("i2"))
+      .join(cold.select(col("part_a").as("i1"), col("part_b").as("i3")),
+        "i1")
+      .filter(col("i2") < col("i3"))
+      .join(pairs.select(col("part_a").as("i2"), col("part_b").as("i3")),
+        Seq("i2", "i3"), "left_semi")
+    val coldTri = cand
+      .join(fi.select(col("basket"), col("item").as("i1")), "i1")
+      .join(fi.select(col("basket"), col("item").as("i2")),
+        Seq("basket", "i2"))
+      .join(fi.select(col("basket"), col("item").as("i3")),
+        Seq("basket", "i3"))
+      .groupBy(col("i1"), col("i2"), col("i3"))
+      .agg(count(lit(1)).as("support"))
+    val hotTri = fi.join(broadcast(hot), col("item") === col("hi"))
+      .select(col("basket"), col("item").as("i1"))
+      .join(fi.select(col("basket"), col("item").as("i2")), "basket")
+      .filter(col("i2") > col("i1"))
+      .join(fi.select(col("basket"), col("item").as("i3")), "basket")
+      .filter(col("i3") > col("i2"))
+      .groupBy(col("i1"), col("i2"), col("i3"))
+      .agg(count(lit(1)).as("support"))
+    coldTri.unionByName(hotTri)
+      .filter(col("support") >= 2)
+      .orderBy(col("support").desc, col("i1"), col("i2"), col("i3"))
+      .limit(20)
+  }
 
   private def refX142(sfDir: String): DataFrame = {
     val capped = refCapped(orderItems(sfDir), 50)
@@ -104,8 +182,40 @@ class BasketKernelSpec extends SparkSpec {
 
   test("cust_pairs2 (>= 2) equals the row-form self-join at sf0.01") {
     val got = sameSet(BasketOps.custPairs2Shared(spark, sf01),
-      refPairs(refCapped(BasketOps.custBasketsShared(spark, sf01), 64), 2L))
+      refPairs(refCapped(custItems(sf01), 64), 2L))
     assert(got.nonEmpty)
+  }
+
+  test("x144 and x160 equal the row-form spelling row for row at sf0.01") {
+    sameRows(BasketOps.x144ItemCf(spark, sf01), refX144(sf01))
+    sameRows(BasketOps.x160Apriori3(spark, sf01), refX160(sf01))
+  }
+
+  test("co-purchase edges equal the order self-join + distinct at " +
+      "sf0.01, with no join and one shuffle on the order key") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val li = Tables.lineitem(spark, sf01)
+    val edges = GraphOps.coPurchaseEdgeFrame(li)
+    val got = sameSet(edges,
+      refEdges(li.select(col("l_orderkey"), col("l_partkey"))))
+    assert(got.nonEmpty)
+    val plan = flattenPlan(edges.queryExecution.executedPlan)
+    val joins = plan.collect { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"the edge build must not join: $joins")
+    val keys = plan.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map {
+          case a: AttributeReference => a.name
+          case x => x.sql
+        }
+        case other => Seq(other.toString)
+      }
+    }
+    assert(keys.sortBy(_.mkString(",")) == Seq(Seq("a", "b"), Seq("basket")),
+      s"expected one order-key and one pair shuffle: $keys")
   }
 
   // -------------------------------------------------- planted baskets
@@ -150,6 +260,39 @@ class BasketKernelSpec extends SparkSpec {
         .groupBy(col("item")).agg(count(lit(1)).as("n_item")),
       refCap.filter(col("item").isNotNull)
         .groupBy(col("item")).agg(count(lit(1)).as("n_item")))
+  }
+
+  test("planted orders: duplicated lines, a single-part order, null " +
+      "parts and null orders give the self-join's edges") {
+    import spark.implicits._
+    val li = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 10L), (1L, 10L), (1L, 20L),        // duplicated line
+      (2L, 30L),                              // single-part order
+      (3L, 10L), (3L, 20L), (3L, null), (3L, 40L),  // null part
+      (null, 10L), (null, 50L),               // null order
+      (4L, 20L), (4L, 40L)                    // (20, 40) in two orders
+    ).toDF("l_orderkey", "l_partkey")
+    val got = sameSet(GraphOps.coPurchaseEdgeFrame(li), refEdges(li))
+    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((10L, 20L), (10L, 40L), (20L, 40L)))
+  }
+
+  test("arrayPairs over sorted struct arrays equals the posexplode + " +
+      "explode(slice) spelling: empty, one-element and tied (deg, id) keys") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, Seq.empty[(Long, Long)]),
+      (2L, Seq((3L, 7L))),
+      (3L, Seq((2L, 9L), (1L, 5L), (2L, 4L), (2L, 4L), (3L, 1L)))
+    ).toDF("src", "raw")
+      .select(col("src"), sort_array(
+        col("raw").cast("array<struct<d:bigint,v:bigint>>")).as("ns"))
+    val ref = rows
+      .select(col("ns"), posexplode(col("ns")).as(Seq("pos", "xs")))
+      .select(col("xs"), explode(slice(col("ns"), col("pos") + 2,
+        size(col("ns")) - col("pos") - 1)).as("ys"))
+    val got = sameSet(BasketOps.arrayPairs(rows, "ns", "xs", "ys"), ref)
+    assert(got.size == 5 * 4 / 2)
   }
 
   test("a 50-item basket that also holds a null is over the 50 cap") {
