@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    BuildLog.reset()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -39,7 +40,7 @@ object Bench {
     // scratch, so the storage family (s*) and the state-store
     // streaming rows (st6b/st7) were absorbing first-build + class-init
     // costs into their timed lines. Run exactly those families once
-    // BEFORE timing — their staging markers and shared artifacts then
+    // BEFORE timing — their staged homes and shared artifacts then
     // serve the timed pass, which measures steady state. Override the
     // family selection with SPARK_GRAFT_PRESTAGE (regex; empty string
     // disables).

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Per-(session, key) memoization of eagerly-materialized frames.
+/** Per-(session, key) memoization of eagerly-materialized frames and
+  * other session-scoped artifacts (a trained model, a written layout's
+  * path) — the one per-session build-once cache.
   *
   * Several contract queries share an expensive intermediate (the hashed
   * shingle set, the verified near-dup pairs, the exact top-k baseline).
@@ -28,24 +30,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Memo {
   private val caches =
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+      java.util.concurrent.ConcurrentHashMap[String, AnyRef]]()
 
-  def apply(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+  def apply[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
     val perSession = caches.synchronized {
-      var m = caches.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        caches.put(spark, m)
-      }
-      m
+      caches.computeIfAbsent(spark,
+        _ => new java.util.concurrent.ConcurrentHashMap[String, AnyRef]())
     }
     val hit = perSession.get(key)
-    if (hit != null) hit
+    if (hit != null) hit.asInstanceOf[T]
     else {
       val built = build
       BuildLog.note(s"memo:$key") // r17: bench attribution, see BuildLog
       val prev = perSession.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      (if (prev != null) prev else built).asInstanceOf[T]
     }
   }
 }

@@ -163,11 +163,7 @@ object ScaleRehearsal {
       s"graft_scale${factor}_${((sfDir + token).hashCode & 0x7fffffff).toHexString}")
     val marker = new File(out, "_complete")
     if (marker.isFile) return out.getAbsolutePath
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(out); out.mkdirs()
+    Tables.rm(out); out.mkdirs()
     val copies = 0 until factor
 
     def guard(df: DataFrame, key: String, stride: Long): Unit = {

@@ -126,25 +126,26 @@ object Tables {
   /** Root of this PROCESS's scratch space: tmpdir/graft_scratch_<pid@host>.
     * Namespacing scratch per process (VERDICT r6 #2) makes two concurrent
     * Verify/Bench runs against the same sfDir unable to race each other's
-    * staging (s5b's ORC round-trip, sql16's warehouse, x54/x51 markers) —
-    * within one process, markers still de-duplicate staging work across
-    * queries exactly as before. A shutdown hook removes the whole root so
-    * repeated runs don't accumulate staged copies in tmp. */
+    * staging (s5b's ORC round-trip, sql16's warehouse, the stream splits
+    * and x54's base aggregate) — within one process, the fingerprint-named
+    * [[scratchHome]]s still de-duplicate staging work across queries. A
+    * shutdown hook removes the whole root so repeated runs don't
+    * accumulate staged copies in tmp. */
   private lazy val scratchRoot: java.io.File = {
     val token = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getName.replaceAll("[^A-Za-z0-9]", "_")
     val root = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_scratch_$token")
     root.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rm(root)))
     root
+  }
+
+  /** Delete `f` and everything under it; a missing `f` is a no-op. */
+  def rm(f: java.io.File): Unit = {
+    // listFiles returns null (not empty) on a plain file or an I/O error
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(): Unit
   }
 
   /** Deterministic per-(process, purpose, corpus) scratch directory under
@@ -198,15 +199,16 @@ object Tables {
     }.mkString(",")
   }
 
-  /** Final home of a shared artifact. The FINGERPRINT IS THE NAME: a
-    * directory exists at this path iff a complete build for exactly
-    * this (corpus, config) was atomically published ([[publishShared]])
-    * — existence is validity, so there is no marker file to race and a
-    * crashed build can never be half-visible (ADVICE r8 on the PQ
-    * model's marker-after-multi-write window). */
-  def sharedDir(tag: String, sfDir: String, fingerprint: String): java.io.File = {
+  /** Final home of a staged artifact under `root`. The FINGERPRINT IS
+    * THE NAME: a directory exists at this path iff a complete build for
+    * exactly this (corpus, config) was atomically published
+    * ([[publishShared]]) — existence is validity, so there is no marker
+    * file to race and a crashed build can never be half-visible (ADVICE
+    * r8 on the PQ model's marker-after-multi-write window). */
+  private[graft] def sharedDir(tag: String, sfDir: String, fingerprint: String,
+      root: java.io.File = sharedRoot): java.io.File = {
     val keyed = StagedVersion + "|" + fingerprint
-    new java.io.File(sharedRoot,
+    new java.io.File(root,
       s"graft_${tag}_${(sfDir.hashCode & 0x7fffffff).toHexString}_" +
         s"${(keyed.hashCode & 0x7fffffff).toHexString}")
   }
@@ -216,7 +218,7 @@ object Tables {
     * builders inside one process never share a temp either —
     * round-12 hardening; the per-session Memo usually dedupes
     * in-process builds, but the temp dir must not rely on it). */
-  def sharedBuildDir(target: java.io.File): java.io.File = {
+  private def sharedBuildDir(target: java.io.File): java.io.File = {
     val token = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getName.replaceAll("[^A-Za-z0-9]", "_")
     new java.io.File(target.getParentFile,
@@ -229,7 +231,8 @@ object Tables {
     * the loser's rename fails on the existing target and its temp build
     * is discarded — either way the target holds one process's COMPLETE
     * build. Returns true if this process's build won. */
-  def publishShared(temp: java.io.File, target: java.io.File): Boolean = {
+  private[graft] def publishShared(temp: java.io.File,
+      target: java.io.File): Boolean = {
     import java.nio.file.{Files, StandardCopyOption}
     try {
       Files.move(temp.toPath, target.toPath,
@@ -239,11 +242,6 @@ object Tables {
     } catch {
       case _: java.nio.file.FileAlreadyExistsException |
           _: java.nio.file.FileSystemException if target.isDirectory =>
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
         rm(temp)
         false
     }
@@ -272,6 +270,7 @@ object Tables {
     "graft.operators.SimSearch",
     "graft.operators.StorageOps",
     "graft.operators.TextIndexOps",
+    "graft.operators.WarehouseOps",
     "graft.streaming.Streams")
 
   /** Code-version token folded into every staged-artifact fingerprint
@@ -297,34 +296,39 @@ object Tables {
       .encodeToString(md.digest()).take(12)
   }
 
-  /** Home directory of a staged artifact keyed by (tag, code version —
-    * via [[sharedDir]], corpus table fingerprint, config) — the
-    * round-10 generalization of the PQ/CC pattern so each new staged
-    * family is three lines, not thirty. */
-  def stagedHome(tag: String, sfDir: String, srcTable: String,
+  /** Home directory of a cross-process staged artifact keyed by (tag,
+    * code version — via [[sharedDir]], the fingerprint of each source
+    * table, config) — the round-10 generalization of the PQ/CC pattern
+    * so each new staged family is three lines, not thirty. */
+  def stagedHome(tag: String, sfDir: String, srcTables: Seq[String],
       cfg: String): java.io.File =
-    sharedDir(tag, sfDir, corpusFingerprint(sfDir, srcTable) + "|" + cfg)
+    sharedDir(tag, sfDir, sourceKey(sfDir, srcTables, cfg))
 
-  /** Build-if-absent for a staged home: `build` fills a process-unique
-    * temp dir (flat parquet or named subdirs), then ONE atomic rename
-    * publishes. Concurrent builders race safely ([[publishShared]]); a
-    * FAILED build deletes its temp dir before rethrowing so tmp never
+  /** [[stagedHome]] under this process's scratch root: keyed the same
+    * way, but removed at exit and never served to another process — for
+    * artifacts whose content depends on when they were staged (the
+    * stream splits' file mtimes). */
+  def scratchHome(tag: String, sfDir: String, srcTables: Seq[String],
+      cfg: String): java.io.File =
+    sharedDir(tag, sfDir, sourceKey(sfDir, srcTables, cfg), scratchRoot)
+
+  private def sourceKey(sfDir: String, srcTables: Seq[String],
+      cfg: String): String =
+    (srcTables.map(corpusFingerprint(sfDir, _)) :+ cfg).mkString("|")
+
+  /** Build-if-absent for a staged home — the one build-once path for
+    * every artifact that outlives a query: `build` fills a
+    * process-unique temp dir (flat parquet or named files), then ONE
+    * atomic rename publishes and notes the build in [[BuildLog]].
+    * Concurrent builders race safely ([[publishShared]]); a FAILED
+    * build deletes its temp dir before rethrowing so tmp never
     * accumulates half-built orphans (ADVICE r10). */
   def ensureStaged(home: java.io.File)(build: java.io.File => Unit): Unit =
     if (!home.isDirectory) {
       val tmp = sharedBuildDir(home)
       tmp.mkdirs()
       try build(tmp)
-      catch {
-        case e: Throwable =>
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach(rm)
-            f.delete(): Unit
-          }
-          rm(tmp)
-          throw e
-      }
+      catch { case e: Throwable => rm(tmp); throw e }
       publishShared(tmp, home): Unit
     }
 
@@ -333,10 +337,10 @@ object Tables {
     * later call in this one) reads the parquet — the build-once/
     * serve-many tier (VERDICT r9 #2 applied to the text-index family). */
   def stagedFrame(spark: SparkSession, tag: String, sfDir: String,
-      srcTable: String, cfg: String)(build: => DataFrame): DataFrame =
+      srcTables: Seq[String], cfg: String)(build: => DataFrame): DataFrame =
     graft.Memo(spark, s"staged_$tag:$sfDir") {
       val s = tune(spark)
-      val home = stagedHome(tag, sfDir, srcTable, cfg)
+      val home = stagedHome(tag, sfDir, srcTables, cfg)
       ensureStaged(home) { tmp =>
         build.write.mode("overwrite").parquet(tmp.getAbsolutePath)
       }

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    BuildLog.reset()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // robustness lever: the spill/scale run (SURVEY §9) re-verifies the
     // whole contract at 10x-plus shuffle partitions on a constrained

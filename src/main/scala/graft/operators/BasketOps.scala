@@ -230,19 +230,9 @@ object BasketOps {
     * process reloads the pair table outright. On a cluster this is
     * the persisted `item_pair_supports` staging table. */
   def custPairs2Shared(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Memo(spark, s"cust_pairs2:$sfDir") {
-      val s = Tables.tune(spark)
-      val fp = Tables.corpusFingerprint(sfDir, "lineitem") + "|" +
-        Tables.corpusFingerprint(sfDir, "orders") + "|custpairs2"
-      val home = Tables.sharedDir("custpairs2", sfDir, fp)
-      if (!home.isDirectory) {
-        val pairs = pairsFromBaskets(custBasketsShared(spark, sfDir),
-          minBaskets = 2L)
-        val tmp = Tables.sharedBuildDir(home)
-        pairs.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        Tables.publishShared(tmp, home)
-      }
-      s.read.parquet(home.getAbsolutePath)
+    Tables.stagedFrame(spark, "custpairs2", sfDir, Seq("lineitem", "orders"),
+        "custpairs2") {
+      pairsFromBaskets(custBasketsShared(spark, sfDir), minBaskets = 2L)
     }
 
   /** X144 — item-item collaborative filtering (Sarwar WWW'01): cosine

@@ -86,7 +86,7 @@ object CurationOps {
     * tier. Oracle: the x134 Lloyd CTE chain over the clone corpus +
     * an exhaustive within-cluster pair recompute. */
   def x172SemDedup(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stagedFrame(spark, "semdedup", sfDir, "embeddings",
+    Tables.stagedFrame(spark, "semdedup", sfDir, Seq("embeddings"),
         "k8i3_t08") {
       // delegates to the public column-parameterized kernel (round 11)
       graft.api.Curation.semDedup(graft.operators.EmbedOps.cloneCorpus(spark, sfDir),
@@ -159,7 +159,7 @@ object CurationOps {
     * probe-assignment CTE + exhaustive same-cluster probe × corpus
     * pair recompute. */
   def x173SemDedupIncr(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stagedFrame(spark, "semdedup_incr", sfDir, "embeddings",
+    Tables.stagedFrame(spark, "semdedup_incr", sfDir, Seq("embeddings"),
         "k8i3_t08_aug") {
       // delegates to the public column-parameterized kernel (round 11):
       // corpus = the original embeddings, probe = the clone shard
@@ -254,7 +254,7 @@ object CurationOps {
     * spelling both engines. Oracle: the factored x172 chain + the
     * same rank arithmetic as a plain window. */
   def x175D4Prune(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stagedFrame(spark, "d4_prune", sfDir, "embeddings",
+    Tables.stagedFrame(spark, "d4_prune", sfDir, Seq("embeddings"),
         "k8i3_t08_p20") {
       // the rank core is the shared public kernel's
       // ([[graft.api.Curation.d4Rank]], round 11); this binding keeps
@@ -799,7 +799,7 @@ object CurationOps {
   def x38IncrementalDedup(spark: SparkSession, sfDir: String): DataFrame =
     // staged cross-process since round 10 (VERDICT r9 #3): the verified
     // probe-vs-index pair table persists; later processes reload it
-    Tables.stagedFrame(spark, "lsh_incr", sfDir, "documents",
+    Tables.stagedFrame(spark, "lsh_incr", sfDir, Seq("documents"),
         "3g_b64r2_m10p7") {
       val hashes = Dedup.shingleHashSet(spark, sfDir)
       graft.api.TextPipeline.nearDupAgainstHashed(

@@ -35,7 +35,7 @@ object Dedup {
     * so the first process per corpus persists it and every later one
     * scans parquet instead of re-shingling the documents table. */
   def shingleHashSet(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.stagedFrame(spark, "shingle_hashes", sfDir, "documents", "3g") {
+    Tables.stagedFrame(spark, "shingle_hashes", sfDir, Seq("documents"), "3g") {
       graft.api.TextPipeline.shingleHashes(
         Tables.documents(spark, sfDir), "doc_id", "text", 3)
     }
@@ -48,18 +48,9 @@ object Dedup {
     * shingling + MinHash + banding + exact verification — the
     * persisted dedup-index table a production pipeline serves from. */
   def nearDupPairsFrame(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Memo(spark, s"neardup:$sfDir") {
-      val s = Tables.tune(spark)
-      val fp = Tables.corpusFingerprint(sfDir, "documents") + "|lsh3g06"
-      val home = Tables.sharedDir("neardup_pairs", sfDir, fp)
-      if (!home.isDirectory) {
-        val pairs = graft.api.TextPipeline
-          .nearDupPairsHashed(shingleHashSet(spark, sfDir))
-        val tmp = Tables.sharedBuildDir(home)
-        pairs.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        Tables.publishShared(tmp, home)
-      }
-      s.read.parquet(home.getAbsolutePath)
+    Tables.stagedFrame(spark, "neardup_pairs", sfDir, Seq("documents"),
+        "lsh3g06") {
+      graft.api.TextPipeline.nearDupPairsHashed(shingleHashSet(spark, sfDir))
     }
 
   /** Memoized + cross-session-staged connected-component labels over
@@ -67,18 +58,8 @@ object Dedup {
     * x75, and x119 (each previously re-ran the loop), and a later
     * process reloads the label table outright. */
   def ccLabelsFrame(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Memo(spark, s"cclabels:$sfDir") {
-      val s = Tables.tune(spark)
-      val fp = Tables.corpusFingerprint(sfDir, "documents") + "|cc3g06"
-      val home = Tables.sharedDir("cclabels", sfDir, fp)
-      if (!home.isDirectory) {
-        val cc = graft.api.TextPipeline
-          .connectedComponents(nearDupPairsFrame(spark, sfDir))
-        val tmp = Tables.sharedBuildDir(home)
-        cc.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        Tables.publishShared(tmp, home)
-      }
-      s.read.parquet(home.getAbsolutePath)
+    Tables.stagedFrame(spark, "cclabels", sfDir, Seq("documents"), "cc3g06") {
+      graft.api.TextPipeline.connectedComponents(nearDupPairsFrame(spark, sfDir))
     }
 
   /** L2 — MinHash-LSH near-dedup (delegates to the reusable

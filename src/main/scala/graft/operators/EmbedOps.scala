@@ -61,7 +61,7 @@ object EmbedOps {
     * reload the verified pair table (the x51 PQ-model pattern). */
   private[graft] def clonePairs(spark: SparkSession,
       sfDir: String): DataFrame =
-    Tables.stagedFrame(spark, "clone_pairs", sfDir, "embeddings",
+    Tables.stagedFrame(spark, "clone_pairs", sfDir, Seq("embeddings"),
         "b8_t08") {
       graft.api.VectorPipeline.bandedCosinePairs(
         cloneCorpus(spark, sfDir), "vec_id", "embedding", 0.8)

@@ -53,7 +53,7 @@ object GraphOps {
       val nb = adjBuckets(sfDir)
       val home = adjHome(sfDir)
       var built: Option[DataFrame] = None
-      if (!home.isDirectory) withAqeOff(spark, nb) {
+      Tables.ensureStaged(home)(tmp => withAqeOff(spark, nb) {
         val sc = Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey"), col("l_suppkey"))
           .join(Tables.orders(spark, sfDir)
@@ -82,7 +82,6 @@ object GraphOps {
         // layout comes from saveAsTable), then the entry drops
         // (external table — files stay) and the dir publishes
         // atomically.
-        val tmp = Tables.sharedBuildDir(home)
         val buildTbl = s"${tbl}_build"
         s.sql(s"DROP TABLE IF EXISTS $buildTbl")
         // repartition to the bucket spec BEFORE the write: without it
@@ -100,9 +99,8 @@ object GraphOps {
         ann.write.mode("overwrite").option("path", tmp.getAbsolutePath)
           .bucketBy(nb, "a").sortBy("a").saveAsTable(buildTbl)
         s.sql(s"DROP TABLE IF EXISTS $buildTbl")
-        Tables.publishShared(tmp, home)
         built = Some(ann)
-      }
+      })
       // per-session registration over the staged files: DDL carries the
       // same bucket spec, so scans keep hash(a) output partitioning
       // (the spec pins single-Exchange iterations on the reloaded table)
@@ -151,11 +149,9 @@ object GraphOps {
   /** Home dir of the staged trade adjacency (fingerprint-named; the
     * bucket count is part of the key, so a corpus-size change that
     * moves [[adjBuckets]] re-stages instead of mis-registering). */
-  private[graft] def adjHome(sfDir: String): java.io.File = {
-    val fp = Tables.corpusFingerprint(sfDir, "lineitem") + "|" +
-      Tables.corpusFingerprint(sfDir, "orders") + s"|b${adjBuckets(sfDir)}Lw"
-    Tables.sharedDir("x111_edges", sfDir, fp)
-  }
+  private[graft] def adjHome(sfDir: String): java.io.File =
+    Tables.stagedHome("x111_edges", sfDir, Seq("lineitem", "orders"),
+      s"b${adjBuckets(sfDir)}Lw")
 
   /** Upper bound on the trade graph's node count, from the STAGED
     * adjacency's parquet footer max(a) — driver-side metadata reads,
@@ -319,10 +315,8 @@ object GraphOps {
   }
 
   /** Home dir of the staged co-purchase edge set (fingerprint-named). */
-  private def copurchaseHome(sfDir: String): java.io.File = {
-    val fp = Tables.corpusFingerprint(sfDir, "lineitem") + "|copurch"
-    Tables.sharedDir("copurchase", sfDir, fp)
-  }
+  private def copurchaseHome(sfDir: String): java.io.File =
+    Tables.stagedHome("copurchase", sfDir, Seq("lineitem"), "copurch")
 
   /** The canonical (a < b) co-purchase part edge set, memoized per
     * (session, corpus) AND staged cross-session under the shared root
@@ -333,17 +327,14 @@ object GraphOps {
   private[operators] def coPurchaseEdges(spark: SparkSession,
       sfDir: String): DataFrame =
     graft.Memo(spark, s"copurchase:$sfDir") {
-      val s = Tables.tune(spark)
       val home = copurchaseHome(sfDir)
       // round 17: build AQE-off at fact-proportional width — one job
       // instead of one per exchange stage; same rows
-      if (!home.isDirectory) withAqeOff(spark, adjBuckets(sfDir)) {
-        val edges = coPurchaseEdgeFrame(Tables.lineitem(spark, sfDir))
-        val tmp = Tables.sharedBuildDir(home)
-        edges.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        Tables.publishShared(tmp, home)
-      }
-      s.read.parquet(home.getAbsolutePath)
+      Tables.ensureStaged(home)(tmp => withAqeOff(spark, adjBuckets(sfDir)) {
+        coPurchaseEdgeFrame(Tables.lineitem(spark, sfDir))
+          .write.mode("overwrite").parquet(tmp.getAbsolutePath)
+      })
+      Tables.tune(spark).read.parquet(home.getAbsolutePath)
     }
 
   /** The distinct (a < b) pairs of parts sharing an order, over
@@ -498,23 +489,19 @@ object GraphOps {
     * this is the persisted `communities` table the serving jobs scan. */
   def lpaLabelsShared(spark: SparkSession, sfDir: String): DataFrame =
     graft.Memo(spark, s"lpa_labels:$sfDir") {
-      val s = Tables.tune(spark)
-      val fp = Tables.corpusFingerprint(sfDir, "lineitem") + "|" +
-        Tables.corpusFingerprint(sfDir, "orders") + s"|lpa$LpaRounds"
-      val home = Tables.sharedDir("lpalabels", sfDir, fp)
-      if (!home.isDirectory) {
+      val home = Tables.stagedHome("lpalabels", sfDir,
+        Seq("lineitem", "orders"), s"lpa$LpaRounds")
+      Tables.ensureStaged(home) { tmp =>
         val edges = coPurchaseEdges(spark, sfDir) // build outside scope
         // round 17: the four per-round cuts execute eagerly — build
         // AQE-off at edge-proportional width (see x111); the write
         // itself also runs inside the scope (same width)
         withAqeOff(spark, cpWidth(sfDir)) {
-          val labels = labelPropagation(edges, LpaRounds)
-          val tmp = Tables.sharedBuildDir(home)
-          labels.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-          Tables.publishShared(tmp, home)
+          labelPropagation(edges, LpaRounds)
+            .write.mode("overwrite").parquet(tmp.getAbsolutePath)
         }
       }
-      s.read.parquet(home.getAbsolutePath)
+      Tables.tune(spark).read.parquet(home.getAbsolutePath)
     }
 
   /** The synchronous propagation loop over a canonical (a < b) edge

@@ -21,16 +21,7 @@ object ScaleOps {
   private[operators] def dropTableAt(s: SparkSession, t: String,
       loc: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $t")
-    val f = new java.io.File(loc)
-    if (f.exists()) {
-      def rm(x: java.io.File): Unit = {
-        // listFiles returns null (not empty) on I/O or permission error
-        if (x.isDirectory)
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete()
-      }
-      rm(f)
-    }
+    Tables.rm(new java.io.File(loc))
   }
 
   /** S20 — bucket PRUNING on a bucketed-table scan: the scan-side
@@ -162,6 +153,26 @@ object ScaleOps {
       s"((($x >> $i) & 1) << ${2 * i}) + ((($y >> $i) & 1) << ${2 * i + 1})")
       .mkString(" + ")
 
+  /** Write the Z-order-clustered orders layout and return its path —
+    * shared by [[x26ZorderLayout]] (row-group pruning via pushed
+    * predicates) and [[s15ManifestPrune]] (file pruning via a stats
+    * manifest). Written once per (session, corpus) — the clustered
+    * layout is the reusable artifact here (on a cluster it's a table
+    * maintenance job's output, amortized over every query that reads
+    * it), so each consumer paying the write would overstate its cost. */
+  def zorderDir(spark: SparkSession, sfDir: String): String =
+    graft.Memo(spark, s"x26_zorder:$sfDir") {
+      val dir = Tables.scratchDir("x26_zorder", sfDir)
+      Tables.orders(spark, sfDir)
+        .withColumn("xb", pmod(col("o_custkey"), lit(256L)))
+        .withColumn("yb", floor(col("o_totalprice") / 2000.0).cast("long"))
+        .withColumn("zval", expr(zInterleaveSql("xb", "yb")))
+        .repartitionByRange(8, col("zval"))
+        .sortWithinPartitions(col("zval"))
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
+
   /** X26 — Z-order clustered layout (multi-dimensional pruning): map
     * two query dimensions onto an 8-bit grid, interleave the bits into a
     * Morton key, range-repartition + sort the table by that key, and
@@ -173,39 +184,6 @@ object ScaleOps {
     * only its leading column. The contract query round-trips the layout
     * and runs a 2-D box aggregate; the oracle is the same box on the
     * base table (layout must not change semantics). */
-  private val zorderCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]()
-
-  /** Write the Z-order-clustered orders layout and return its path —
-    * shared by [[x26ZorderLayout]] (row-group pruning via pushed
-    * predicates) and [[s15ManifestPrune]] (file pruning via a stats
-    * manifest). Written once per (session, corpus) — the clustered
-    * layout is the reusable artifact here (on a cluster it's a table
-    * maintenance job's output, amortized over every query that reads
-    * it), so each consumer paying the write would overstate its cost. */
-  def zorderDir(spark: SparkSession, sfDir: String): String = {
-    val perSession = zorderCache.synchronized {
-      var m = zorderCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        zorderCache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(sfDir, { _ =>
-      val dir = Tables.scratchDir("x26_zorder", sfDir)
-      Tables.orders(spark, sfDir)
-        .withColumn("xb", pmod(col("o_custkey"), lit(256L)))
-        .withColumn("yb", floor(col("o_totalprice") / 2000.0).cast("long"))
-        .withColumn("zval", expr(zInterleaveSql("xb", "yb")))
-        .repartitionByRange(8, col("zval"))
-        .sortWithinPartitions(col("zval"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-  }
-
   def x26ZorderLayout(spark: SparkSession, sfDir: String): DataFrame = {
     val s = Tables.tune(spark)
     s.read.parquet(zorderDir(spark, sfDir))

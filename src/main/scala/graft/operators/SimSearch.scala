@@ -74,54 +74,29 @@ object SimSearch {
 
   /** Memoized PQ model — x51 and x52 share one training run per
     * (session, corpus), the persisted-model shape a production pipeline
-    * uses (train once, serve many query batches). [[graft.Memo]]'s
-    * design, widened to the two-frame model; weak on the session so a
-    * stopped session's checkpointed blocks can be collected. */
-  private val pqModels =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, VectorPipeline.PqModel]]()
-
-  private def pqModel(spark: SparkSession, sfDir: String): VectorPipeline.PqModel = {
-    val perSession = pqModels.synchronized {
-      var m = pqModels.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, VectorPipeline.PqModel]()
-        pqModels.put(spark, m)
+    * uses (train once, serve many query batches).
+    *
+    * Persisted-model tier (VERDICT r7 #7): the trained model is staged
+    * as parquet under the SHARED root ([[Tables.ensureStaged]] —
+    * fingerprint-named by the source corpus + config) — a LATER
+    * SESSION loads the codebooks+codes instead of re-running Lloyd
+    * iterations, making train-once/serve-many real across sessions,
+    * not just a per-session memo. The build publishes with ONE atomic
+    * rename (ADVICE r8: the old write-then-marker sequence left a
+    * window where two concurrent JVMs could interleave the three
+    * sub-writes under one validated marker); training then serves from
+    * the published copy, so the load path is exercised on every train. */
+  private def pqModel(spark: SparkSession, sfDir: String): VectorPipeline.PqModel =
+    graft.Memo(spark, s"pq_model:$sfDir") {
+      val home = Tables.stagedHome("pq_model", sfDir, Seq("embeddings"),
+        "16:32:4")
+      Tables.ensureStaged(home) { tmp =>
+        VectorPipeline.savePqModel(VectorPipeline.pqTrain(
+          Tables.embeddings(spark, sfDir), "vec_id", "embedding",
+          numSub = 16, numCodes = 32, iters = 4), tmp.getAbsolutePath)
       }
-      m
+      VectorPipeline.loadPqModel(spark, home.getAbsolutePath)
     }
-    val hit = perSession.get(sfDir)
-    if (hit != null) hit
-    else {
-      // Persisted-model tier (VERDICT r7 #7): the trained model lives
-      // as parquet under the SHARED root (Tables.sharedDir — stable
-      // across processes, fingerprint-named by the source corpus +
-      // config) — a LATER SESSION loads the codebooks+codes instead of
-      // re-running Lloyd iterations, making train-once/serve-many real
-      // across sessions, not just a per-session memo. The build writes
-      // into a process-unique temp dir and publishes with ONE atomic
-      // rename (ADVICE r8: the old write-then-marker sequence left a
-      // window where two concurrent JVMs could interleave the three
-      // sub-writes under one validated marker); training then serves
-      // from the published copy, so the load path is exercised on
-      // every train.
-      val fp = Tables.corpusFingerprint(sfDir, "embeddings") + ":16:32:4"
-      val home = Tables.sharedDir("pq_model", sfDir, fp)
-      val built = {
-        if (!home.isDirectory) {
-          val trained = VectorPipeline.pqTrain(
-            Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-            numSub = 16, numCodes = 32, iters = 4)
-          val tmp = Tables.sharedBuildDir(home)
-          VectorPipeline.savePqModel(trained, tmp.getAbsolutePath)
-          Tables.publishShared(tmp, home)
-        }
-        VectorPipeline.loadPqModel(spark, home.getAbsolutePath)
-      }
-      val prev = perSession.putIfAbsent(sfDir, built)
-      if (prev != null) prev else built
-    }
-  }
 
   /** X51 raw — product-quantization ANN (Jégou TPAMI'11): 16 subspaces
     * × 32 codes trained with 4 deterministic Lloyd iterations on the

@@ -89,7 +89,7 @@ object StorageOps {
     // config) only, so the first process per corpus pays the write and
     // every later Verify/Bench run pays only the stats-pruned read —
     // exactly how a 100 TB lake amortizes its layout jobs
-    val home = Tables.stagedHome("s9_layout", sfDir, "lineitem",
+    val home = Tables.stagedHome("s9_layout", sfDir, Seq("lineitem"),
       "r8_sorted")
     Tables.ensureStaged(home) { tmp =>
       Tables.lineitem(spark, sfDir)
@@ -190,7 +190,7 @@ object StorageOps {
     * the driver's hash compare (SURVEY §1.3). */
   def s19NestedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     // pure layout → staged cross-process (VERDICT r11 #4; the s9 note)
-    val home = Tables.stagedHome("s19_nested", sfDir, "orders", "v1")
+    val home = Tables.stagedHome("s19_nested", sfDir, Seq("orders"), "v1")
     Tables.ensureStaged(home) { tmp =>
       Tables.orders(spark, sfDir)
         .select(col("o_orderkey"),
@@ -244,7 +244,7 @@ object StorageOps {
     // (VERDICT r11 #4); the claim columns are re-MEASURED from the
     // staged listings on every run, so a corrupted or stale layout
     // flips a claim rather than silently passing
-    val home = Tables.stagedHome("s18_compact", sfDir, "orders",
+    val home = Tables.stagedHome("s18_compact", sfDir, Seq("orders"),
       s"t$targetBytes")
     Tables.ensureStaged(home) { tmp =>
       val frag = s"${tmp.getAbsolutePath}/frag"
@@ -284,7 +284,7 @@ object StorageOps {
     val s = Tables.tune(spark)
     // both immutable version dirs are pure functions of the corpus →
     // staged cross-process as named subdirs (VERDICT r11 #4)
-    val home = Tables.stagedHome("s21_snap", sfDir, "customer", "v2cdc")
+    val home = Tables.stagedHome("s21_snap", sfDir, Seq("customer"), "v2cdc")
     Tables.ensureStaged(home) { tmp =>
       val base = tmp.getAbsolutePath
       Tables.customer(spark, sfDir)
@@ -492,7 +492,7 @@ object StorageOps {
     // staged cross-process (VERDICT r11 #4) — the corpus fingerprint
     // in the home key replaces the old per-process row-count marker
     // (and drops the count() scan every call paid to check it)
-    val home = Tables.stagedHome("s27_nested", sfDir, "documents", "v1")
+    val home = Tables.stagedHome("s27_nested", sfDir, Seq("documents"), "v1")
     Tables.ensureStaged(home) { tmp =>
       Tables.documents(spark, sfDir)
         .select(col("doc_id"),
@@ -523,7 +523,7 @@ object StorageOps {
     // three pure layouts → staged cross-process as named subdirs
     // (VERDICT r11 #4); the codec-extension claim is re-checked from
     // the staged listing every run
-    val home = Tables.stagedHome("s28_codec", sfDir, "lineitem", "q40")
+    val home = Tables.stagedHome("s28_codec", sfDir, Seq("lineitem"), "q40")
     Tables.ensureStaged(home) { tmp =>
       val base = Tables.lineitem(spark, sfDir)
         .filter(col("l_quantity") > 40.0)

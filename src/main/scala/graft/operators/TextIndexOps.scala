@@ -149,7 +149,7 @@ object TextIndexOps {
     * tokenizer trainer ships. */
   private def bpeMerges16(spark: SparkSession,
       sfDir: String): Seq[(String, String)] = {
-    val home = Tables.stagedHome("bpe_merges", sfDir, "documents", "m16")
+    val home = Tables.stagedHome("bpe_merges", sfDir, Seq("documents"), "m16")
     Tables.ensureStaged(home) { tmp =>
       import spark.implicits._
       TextPipeline.trainBpe(Tables.documents(spark, sfDir), "text", 16)
@@ -206,7 +206,7 @@ object TextIndexOps {
     * atomically published; later processes reload both. */
   private def pfxSelfHome(spark: SparkSession,
       sfDir: String): java.io.File = {
-    val home = Tables.stagedHome("pfx_self", sfDir, "documents", "3g_t05")
+    val home = Tables.stagedHome("pfx_self", sfDir, Seq("documents"), "3g_t05")
     Tables.ensureStaged(home) { tmp =>
       val d = TextPipeline.prefixJaccardPairsDetail(
         Dedup.shingleHashSet(spark, sfDir), 0.5)
@@ -262,7 +262,7 @@ object TextIndexOps {
     * `pairs/` + `stop/`, the [[pfxSelfHome]] pattern. */
   private def pfxIncrHome(spark: SparkSession,
       sfDir: String): java.io.File = {
-    val home = Tables.stagedHome("pfx_incr", sfDir, "documents",
+    val home = Tables.stagedHome("pfx_incr", sfDir, Seq("documents"),
       "3g_t05_m10p3")
     Tables.ensureStaged(home) { tmp =>
       val sh = Dedup.shingleHashSet(spark, sfDir)
@@ -359,7 +359,7 @@ object TextIndexOps {
     * the same pattern as the x48 self-join family. */
   private def ctnSelfHome(spark: SparkSession,
       sfDir: String): java.io.File = {
-    val home = Tables.stagedHome("ctn_self", sfDir, "documents", "3g_t08")
+    val home = Tables.stagedHome("ctn_self", sfDir, Seq("documents"), "3g_t08")
     Tables.ensureStaged(home) { tmp =>
       val d = graft.api.TextPipeline.containmentPairsDetail(
         Dedup.shingleHashSet(spark, sfDir), 0.8)

@@ -100,8 +100,8 @@ object WarehouseOps {
     * the batch analog of a18's no-rescan rollup): per-(status, month)
     * order metrics maintained as a PERSISTED aggregate table plus a
     * delta. The base partition (orders strictly before the last 6
-    * months) is aggregated ONCE, written to scratch parquet keyed by a
-    * source-size marker, and every later run reads the agg table back —
+    * months) is aggregated ONCE, written to a scratch home named by the
+    * source fingerprint, and every later run reads the agg table back —
     * base ROWS are never rescanned. The delta (last 6 months) aggregates
     * fresh, and the merge is a union + re-aggregate of PARTIALS (counts
     * add; DECIMAL sums add; avg derives from merged sum/count — only
@@ -111,7 +111,6 @@ object WarehouseOps {
     * pattern: yesterday's agg table + today's partition, never the
     * history. */
   def x54IncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val o = Tables.orders(spark, sfDir)
     // deterministic cut: 6 months before the max order date — a pure
     // function of the data (single-row driver max, the stageLateSplit
@@ -124,20 +123,16 @@ object WarehouseOps {
         date_trunc("month", col("o_orderdate")).as("month"))
       .agg(count(lit(1)).as("n"),
         sum(col("o_totalprice").cast(Det.Money)).as("total"))
-    val baseDir = Paths.get(Tables.scratchDir("x54base", sfDir))
-    val marker = baseDir.resolve("_agg_from_src")
     // content fingerprint: each data file's size + mtime — a
     // regenerated corpus of identical byte size still invalidates the
     // persisted base agg (ADVICE r6), so a stale cut can never serve
     // silently
-    val srcFp = Tables.corpusFingerprint(sfDir, "orders")
-    val dataDir = baseDir.resolve("agg").toString
-    if (!Files.exists(marker) || Files.readString(marker) != srcFp) {
+    val home = Tables.scratchHome("x54base", sfDir, Seq("orders"), "m6")
+    Tables.ensureStaged(home) { tmp =>
       aggOf(o.filter(col("o_orderdate") < lit(cut)))
-        .write.mode("overwrite").parquet(dataDir)
-      Files.writeString(marker, srcFp)
+        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
     }
-    val base = Tables.tune(spark).read.parquet(dataDir)
+    val base = Tables.tune(spark).read.parquet(home.getAbsolutePath)
     val delta = aggOf(o.filter(col("o_orderdate") >= lit(cut)))
     base.unionByName(delta)
       .groupBy(col("o_orderstatus"), col("month"))

@@ -949,10 +949,6 @@ private[sources] class GraftParquetTable(tableName: String,
       .map(r => new File(new java.net.URI(r.getString(0)))) ++
       (listedAtScan diff seenInScan).map(new File(d, _))
     val tmp = new File(s"$dir.rewrite_${System.nanoTime()}")
-    def rm(x: File): Unit = {
-      Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-      x.delete(): Unit
-    }
     val touchedReader = declared.fold(spark.read)(s => spark.read.schema(s))
       .option(GraftParquetTable.FieldIdReadConf, "true") // r15: scoped
     touchedReader.parquet(touched.map(_.getAbsolutePath).toIndexedSeq: _*)
@@ -976,7 +972,7 @@ private[sources] class GraftParquetTable(tableName: String,
       GraftCdf.recoverPending(d, discardStale = true) // r15: crashed pub
       val now = GraftTxn.dataFiles(d)
       if (now != listedAtScan) {
-        rm(tmp)
+        graft.Tables.rm(tmp)
         cdfBuild.foreach(GraftCdf.discard)
         throw new GraftTxn.CommitConflictException(tableName,
           (listedAtScan diff now) ++ (now diff listedAtScan))
@@ -1030,7 +1026,7 @@ private[sources] class GraftParquetTable(tableName: String,
       val trash = new File(s"$dir.trash_${System.nanoTime()}")
       Files.move(d.toPath, trash.toPath, StandardCopyOption.ATOMIC_MOVE)
       Files.move(tmp.toPath, d.toPath, StandardCopyOption.ATOMIC_MOVE)
-      rm(trash)
+      graft.Tables.rm(trash)
       cdfBuild.foreach { _ =>
         GraftCdf.recoverPending(d, discardStale = true) // finishes ours
         GraftCdf.prune(d, GraftTxn.retention)

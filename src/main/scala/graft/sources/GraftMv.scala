@@ -219,16 +219,10 @@ private[graft] object GraftMv {
     // with the localCheckpoint action above on the pinned Spark, but a
     // future change to the checkpoint action path must degrade to a
     // recount of the delta, never a hang
-    val nDelta =
-      try {
-        import scala.concurrent.duration.DurationInt
-        val metrics = scala.concurrent.Await.result(
-          scala.concurrent.Future(obs.get)(
-            scala.concurrent.ExecutionContext.global), 10.seconds)
-        metrics("n").asInstanceOf[Long]
-      } catch {
-        case _: java.util.concurrent.TimeoutException => signed.count()
-      }
+    val nDelta = {
+      import scala.concurrent.duration.DurationInt
+      observedOr(obs, 10.seconds)(signed.count())
+    }
     // intent BEFORE the commit (class doc)
     store(df, d.copy(pendingTo = Some(cur),
       mvVersionBefore = Some(GraftTxn.version(mvDir))))
@@ -238,6 +232,14 @@ private[graft] object GraftMv {
     store(df, d.copy(lastVersion = cur))
     (cur - d.lastVersion, nDelta)
   }
+
+  /** The observed metric `n` of `obs`, or `fallback` when it has not
+    * arrived within `wait`. Awaits the observation's own future, so a
+    * timeout leaves no thread blocked behind it. */
+  private[graft] def observedOr(obs: org.apache.spark.sql.Observation,
+      wait: scala.concurrent.duration.FiniteDuration)(fallback: => Long): Long =
+    try scala.concurrent.Await.result(obs.future, wait).getAs[Long]("n")
+    catch { case _: java.util.concurrent.TimeoutException => fallback }
 
   /** Overwrite the MV table as one ordinary graft commit (snapshot,
     * promote-first, version bump) under its lock. */

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 // top-level (not object-private): Catalyst codegen instantiates these from
@@ -157,14 +158,31 @@ import graft.SessionConf.{AqeOff, scoped}
   */
 object Streams {
 
-  /** Locate the single part file of a coalesce(1) staging write with the
-    * directory stream CLOSED afterwards (Files.list leaks a directory
-    * handle per call otherwise — ADVICE r6). */
-  private def singlePart(tmp: java.nio.file.Path): java.nio.file.Path =
-    scala.util.Using.resource(Files.list(tmp)) { st =>
+  /** Write `df` as the one parquet file `dir/<name>.parquet` — the
+    * file a replay feeds as one micro-batch: a coalesce(1) write into a
+    * `_tmp_<name>` subdirectory, whose single part file moves into
+    * place before the subdirectory goes. `mtime` (epoch ms) stamps the
+    * file when given: the file source replays files oldest first. */
+  private def writeSingle(df: DataFrame, dir: Path, name: String,
+      mtime: Option[Long] = None): Path = {
+    val tmp = dir.resolve(s"_tmp_$name")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    // directory stream CLOSED afterwards (Files.list leaks a directory
+    // handle per call otherwise — ADVICE r6)
+    val part = scala.util.Using.resource(Files.list(tmp)) { st =>
       st.iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
     }
+    val dst = dir.resolve(s"$name.parquet")
+    Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+    Tables.rm(tmp.toFile)
+    mtime.foreach(t => Files.setLastModifiedTime(dst, FileTime.fromMillis(t)))
+    dst
+  }
+
+  /** Stamp for the first of a replay's files: a minute ago, so the
+    * later files' stamps, seconds apart, stay in the past. */
+  private def replayEpoch(): Long = System.currentTimeMillis() - 60000L
 
 
   /** Stage the events file into a directory `copies` times (the file
@@ -181,22 +199,14 @@ object Streams {
     * every consumer, so sharing is race-free by the
     * existence-is-validity rule. */
   private def stage(spark: SparkSession, sfDir: String, copies: Int): String = {
-    val fp = Tables.corpusFingerprint(sfDir, "events") + s"|c$copies"
-    val home = Tables.sharedDir(s"stream$copies", sfDir, fp)
-    if (!home.isDirectory) {
-      val build = Tables.sharedBuildDir(home)
-      val tmp = build.toPath.resolve("_tmp_stage")
-      Tables.events(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = singlePart(tmp)
-      (0 until copies).foreach { i =>
-        Files.copy(part, build.toPath.resolve(s"events_$i.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
+    val home = Tables.stagedHome(s"stream$copies", sfDir, Seq("events"),
+      s"c$copies")
+    Tables.ensureStaged(home) { build =>
+      val first = writeSingle(Tables.events(spark, sfDir), build.toPath,
+        "events_0")
+      (1 until copies).foreach { i =>
+        Files.copy(first, build.toPath.resolve(s"events_$i.parquet"))
       }
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
-      Tables.publishShared(build, home)
     }
     home.getAbsolutePath
   }
@@ -364,42 +374,27 @@ object Streams {
     * so the Spark-side rule and the µs-reading DuckDB oracle classify
     * boundary rows identically. */
   private def stageLateSplit(spark: SparkSession, sfDir: String): String = {
-    val dir = Paths.get(Tables.scratchDir("stream_late", sfDir))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // the split is a pure function of events.parquet — reuse it across
-    // runs (marker records the source fingerprint; relative mtimes persist)
-    val marker = dir.resolve("_staged_from_src")
-    val fp = Tables.corpusFingerprint(sfDir, "events")
-    if (Files.exists(marker) && Files.readString(marker) == fp &&
-        (0 to 2).forall(i => Files.exists(dir.resolve(s"batch$i.parquet")))) {
-      return dir.toString
+    // the split is a pure function of events.parquet — staged once per
+    // process, in scratch: the mtimes are relative to the staging time
+    val home = Tables.scratchHome("stream_late", sfDir, Seq("events"), "h1h2")
+    Tables.ensureStaged(home) { tmp =>
+      val ev = Tables.events(spark, sfDir)
+        .withColumn("ts_us", expr("ts div 1000"))
+      // single-row driver-side max: the cut must be a literal before the
+      // plan is built (same role as CC's convergence count — not a loop
+      // over data)
+      val maxUs = ev.agg(max(col("ts_us"))).collect()(0).getLong(0)
+      val cut1 = maxUs - 3600L * 1000000L  // 1 hour
+      val cut2 = maxUs - 7200L * 1000000L  // 2 hours
+      val t0 = replayEpoch()
+      Seq(col("ts_us") > cut1,
+        col("ts_us") <= cut1 && col("ts_us") > cut2,
+        col("ts_us") <= cut2).zipWithIndex.foreach { case (c, i) =>
+        writeSingle(ev.filter(c).drop("ts_us"), tmp.toPath, s"batch$i",
+          Some(t0 + i * 10000L))
+      }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-    Files.createDirectories(dir)
-    val ev = Tables.events(spark, sfDir).withColumn("ts_us", expr("ts div 1000"))
-    // single-row driver-side max: the cut must be a literal before the
-    // plan is built (same role as CC's convergence count — not a loop
-    // over data)
-    val maxUs = ev.agg(max(col("ts_us"))).collect()(0).getLong(0)
-    val cut1 = maxUs - 3600L * 1000000L  // 1 hour
-    val cut2 = maxUs - 7200L * 1000000L  // 2 hours
-    def writeOne(df: DataFrame, name: String, mtimeOffsetSec: Long): Unit = {
-      val tmp = dir.resolve(s"_tmp_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = singlePart(tmp)
-      val dst = dir.resolve(s"$name.parquet")
-      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000L + mtimeOffsetSec * 1000L))
-    }
-    writeOne(ev.filter(col("ts_us") > cut1).drop("ts_us"), "batch0", 0L)
-    writeOne(ev.filter(col("ts_us") <= cut1 && col("ts_us") > cut2)
-      .drop("ts_us"), "batch1", 10L)
-    writeOne(ev.filter(col("ts_us") <= cut2).drop("ts_us"), "batch2", 20L)
-    Files.writeString(marker, fp)
-    dir.toString
+    home.getAbsolutePath
   }
 
   /** ST4 — watermark late-data drop, observable and deterministic: the
@@ -610,42 +605,24 @@ object Streams {
     * Sentinels must flow into the query; their output rows are dropped
     * post-sink, batch-side (st12/st13/st17 all do this). */
   private def stageOuterSplit(spark: SparkSession, sfDir: String): String = {
-    val dir = Paths.get(Tables.scratchDir("stream_outer", sfDir))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = dir.resolve("_staged_from_src")
-    val fp = Tables.corpusFingerprint(sfDir, "events")
-    if (Files.exists(marker) && Files.readString(marker) == fp &&
-        Files.exists(dir.resolve("batch0.parquet")) &&
-        (1 to 2).forall(i => Files.exists(dir.resolve(s"sentinel$i.parquet")))) {
-      return dir.toString
+    val home = Tables.scratchHome("stream_outer", sfDir, Seq("events"),
+      "s3h4h")
+    Tables.ensureStaged(home) { tmp =>
+      val ev = Tables.events(spark, sfDir)
+      val maxNs = ev.agg(max(col("ts"))).collect()(0).getLong(0)
+      def sentinel(id: Long, hours: Long): DataFrame = {
+        import spark.implicits._
+        val ts = maxNs + hours * 3600L * 1000000000L
+        Seq((id, ts, -1L, "click", 0.0, "{}"),
+          (id - 1, ts, -1L, "purchase", 0.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      }
+      val t0 = replayEpoch()
+      writeSingle(ev, tmp.toPath, "batch0", Some(t0))
+      writeSingle(sentinel(-1L, 3L), tmp.toPath, "sentinel1", Some(t0 + 10000L))
+      writeSingle(sentinel(-3L, 4L), tmp.toPath, "sentinel2", Some(t0 + 20000L))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-    Files.createDirectories(dir)
-    val ev = Tables.events(spark, sfDir)
-    val maxNs = ev.agg(max(col("ts"))).collect()(0).getLong(0)
-    def writeOne(df: DataFrame, name: String, mtimeOffsetSec: Long): Unit = {
-      val tmp = dir.resolve(s"_tmp_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = singlePart(tmp)
-      val dst = dir.resolve(s"$name.parquet")
-      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 60000L + mtimeOffsetSec * 1000L))
-    }
-    def sentinel(id: Long, hours: Long): DataFrame = {
-      import spark.implicits._
-      val ts = maxNs + hours * 3600L * 1000000000L
-      Seq((id, ts, -1L, "click", 0.0, "{}"),
-        (id - 1, ts, -1L, "purchase", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    }
-    writeOne(ev, "batch0", 0L)
-    writeOne(sentinel(-1L, 3L), "sentinel1", 10L)
-    writeOne(sentinel(-3L, 4L), "sentinel2", 20L)
-    Files.writeString(marker, fp)
-    dir.toString
+    home.getAbsolutePath
   }
 
   /** ST12 — stream-stream LEFT OUTER join with event-time bounds: every
@@ -975,70 +952,36 @@ object Streams {
     * and filtered in stream time, corpus never self-joined. */
   /** Stage the probe shard of documents (doc_id % 10 = 3) as two
     * deterministic parquet files — the replay feed st19/st20 consume
-    * one file per micro-batch. Reused per (process, sfDir) via a
-    * content-fingerprint marker. */
-  private def stageProbeDocs(spark: SparkSession, sfDir: String): String = {
-    val s = Tables.tune(spark)
-    val dir = Paths.get(Tables.scratchDir("stream_docs", sfDir))
-    val marker = dir.resolve("_staged_from_src")
-    val fp = Tables.corpusFingerprint(sfDir, "documents")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp &&
-        (0 to 1).forall(i => Files.exists(dir.resolve(s"docs_$i.parquet"))))) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-      Files.createDirectories(dir)
-      val probe = Tables.documents(s, sfDir)
-        .filter(col("doc_id") % 10 === 3)
-      (0 to 1).foreach { i =>
-        val tmp = dir.resolve(s"_tmp_docs_$i")
-        probe.filter(expr("(doc_id div 10) % 2") === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = singlePart(tmp)
-        val dst = dir.resolve(s"docs_$i.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - 60000L + i * 1000L))
-      }
-      Files.writeString(marker, fp)
-    }
-    dir.toString
-  }
+    * one file per micro-batch. Staged once per (process, corpus) in a
+    * fingerprint-named [[Tables.scratchHome]]. */
+  private def stageProbeDocs(spark: SparkSession, sfDir: String): String =
+    stageTwoBatches(sfDir, "stream_docs", "documents", "docs",
+      Tables.documents(spark, sfDir).filter(col("doc_id") % 10 === 3),
+      "doc_id")
 
   /** Stage the x173 clone shard (the re-encoded probe vectors) as two
     * deterministic parquet files for micro-batch replay — the vector
-    * analog of [[stageProbeDocs]], reused per (process, sfDir) via a
-    * content-fingerprint marker. */
-  private def stageProbeVecs(spark: SparkSession, sfDir: String): String = {
-    val s = Tables.tune(spark)
-    val dir = Paths.get(Tables.scratchDir("stream_vecs", sfDir))
-    val marker = dir.resolve("_staged_from_src")
-    val fp = Tables.corpusFingerprint(sfDir, "embeddings")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp &&
-        (0 to 1).forall(i => Files.exists(dir.resolve(s"vecs_$i.parquet"))))) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir.toString), true)
-      Files.createDirectories(dir)
-      val probe = graft.operators.EmbedOps.cloneCorpus(s, sfDir)
-        .filter(col("vec_id") >= graft.operators.EmbedOps.CloneOffset)
+    * analog of [[stageProbeDocs]], staged the same way. */
+  private def stageProbeVecs(spark: SparkSession, sfDir: String): String =
+    stageTwoBatches(sfDir, "stream_vecs", "embeddings", "vecs",
+      graft.operators.EmbedOps.cloneCorpus(spark, sfDir)
+        .filter(col("vec_id") >= graft.operators.EmbedOps.CloneOffset),
+      "vec_id")
+
+  /** `probe` split by `(id div 10) % 2` into `<name>_0` and `<name>_1`,
+    * one second apart in mtime, in a scratch home keyed by `src`. */
+  private def stageTwoBatches(sfDir: String, tag: String, src: String,
+      name: String, probe: => DataFrame, id: String): String = {
+    val home = Tables.scratchHome(tag, sfDir, Seq(src), "div10mod2")
+    Tables.ensureStaged(home) { tmp =>
+      val shard = probe
+      val t0 = replayEpoch()
       (0 to 1).foreach { i =>
-        val tmp = dir.resolve(s"_tmp_vecs_$i")
-        probe.filter(expr("(vec_id div 10) % 2") === i)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = singlePart(tmp)
-        val dst = dir.resolve(s"vecs_$i.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        fs.delete(new org.apache.hadoop.fs.Path(tmp.toString), true)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() - 60000L + i * 1000L))
+        writeSingle(shard.filter(expr(s"($id div 10) % 2") === i),
+          tmp.toPath, s"${name}_$i", Some(t0 + i * 1000L))
       }
-      Files.writeString(marker, fp)
     }
-    dir.toString
+    home.getAbsolutePath
   }
 
   /** ST26 — STREAMING SemDeDup (x173's streaming face, closing the
@@ -1380,13 +1323,9 @@ object Streams {
     val schema = ev.schema
     // stage one half of the feed as a single parquet file in srcDir
     def stageHalf(even: Boolean, name: String): Long = {
-      val tmp = base.resolve(s"_tmp_$name")
       val half = ev.filter(col("event_id") % 2 === (if (even) 0 else 1))
       val n = half.count()
-      half.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      Files.copy(singlePart(tmp), srcDir.resolve(s"$name.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      fs.delete(new HPath(tmp.toString), true)
+      writeSingle(half, srcDir, name)
       n
     }
     // one replay leg: same source dir, same checkpoint, fresh sink

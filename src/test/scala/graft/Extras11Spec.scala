@@ -156,7 +156,7 @@ class Extras11Spec extends SparkSpec {
     // stage via the contract row once, then inspect the pruned plan
     // (round 12: the layout lives in the cross-process artifact tier)
     graft.operators.StorageOps.s27NestedPruning(spark, sf).collect()
-    val home = Tables.stagedHome("s27_nested", sf, "documents", "v1")
+    val home = Tables.stagedHome("s27_nested", sf, Seq("documents"), "v1")
     val agg = graft.operators.StorageOps.nestedLangCounts(
       Tables.tune(spark).read.parquet(home.getAbsolutePath))
     val scans = flattenPlan(agg.queryExecution.executedPlan).collect {

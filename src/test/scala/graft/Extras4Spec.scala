@@ -48,7 +48,7 @@ class Extras4Spec extends SparkSpec {
     // the written file really carries nested types (round 12: the
     // layout lives in the cross-process artifact tier)
     val schema = spark.read.parquet(
-      Tables.stagedHome("s19_nested", sf, "orders", "v1").getAbsolutePath)
+      Tables.stagedHome("s19_nested", sf, Seq("orders"), "v1").getAbsolutePath)
       .schema
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     assert(schema("meta").dataType.isInstanceOf[StructType])

@@ -215,7 +215,7 @@ class Extras5Spec extends SparkSpec {
   test("s21 time travel: v1 is bit-identical to the source after the v2 write") {
     graft.operators.StorageOps.s21SnapshotVersions(spark, sf).collect() // runs both writes
     // round 12: the version dirs live in the cross-process artifact tier
-    val base = Tables.stagedHome("s21_snap", sf, "customer", "v2cdc")
+    val base = Tables.stagedHome("s21_snap", sf, Seq("customer"), "v2cdc")
       .getAbsolutePath
     val v1 = spark.read.parquet(s"$base/v=1").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -299,8 +299,27 @@ class Extras6Spec extends SparkSpec {
     assert(out.head.getLong(0) == 3L && innerBuilds == 1)
     // and the nested path is the one the contract actually runs:
     // a FRESH memo state would rebuild clonePairs with the guard inside
-    assert(Memo(spark, "memo-reentrancy-inner") { fail("must be cached") }
+    assert(Memo[org.apache.spark.sql.DataFrame](spark,
+        "memo-reentrancy-inner") { fail("must be cached") }
       .count() == 3L)
+  }
+
+  test("Memo holds any value: built and noted once per session") {
+    // a trained model or a written layout's path is memoised exactly
+    // like a frame, and its build shows in BuildLog like a frame's
+    val key = s"memo-any-${System.nanoTime()}"
+    var builds = 0
+    def model(s: org.apache.spark.sql.SparkSession): Vector[Int] =
+      Memo(s, key) { builds += 1; Vector(1, 2, 3) }
+    BuildLog.setCurrent("memo-any-spec")
+    try {
+      val first = model(spark)
+      assert(model(spark) eq first)
+      assert(builds == 1)
+      assert(BuildLog.snapshot()("memo-any-spec").count(_ == s"memo:$key") == 1)
+      // another session builds its own
+      assert(model(spark.newSession()) == first && builds == 2)
+    } finally BuildLog.setCurrent("")
   }
 
   test("x41/x42 run from a cold memo in bench's sorted order") {

@@ -427,6 +427,26 @@ class Round16Spec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS p16p.b"): Unit
   }
 
+  test("mv refresh wait: an observation never fulfilled takes the fallback, no thread left waiting") {
+    import graft.sources.GraftMv
+    import scala.jdk.CollectionConverters._
+    def waitingInGet(): Int = Thread.getAllStackTraces.asScala.values
+      .count(_.exists(f => f.getClassName == "org.apache.spark.sql.Observation" &&
+        f.getMethodName == "get"))
+    val before = waitingInGet()
+    val never = new org.apache.spark.sql.Observation("p16_never")
+    var recounts = 0
+    assert(GraftMv.observedOr(never, 50.millis) { recounts += 1; 42L } == 42L)
+    assert(recounts == 1)
+    Thread.sleep(100)
+    assert(waitingInGet() == before,
+      "a timed-out wait must not leave a thread parked in Observation.get")
+    // a fulfilled observation returns its metric without the fallback
+    val seen = new org.apache.spark.sql.Observation("p16_seen")
+    spark.range(7).observe(seen, count(lit(1)).as("n")).collect()
+    assert(GraftMv.observedOr(seen, 10.seconds)(fail("fallback ran")) == 7L)
+  }
+
   test("snapshot-then-tail: offsets resume exactly, mid-snapshot and at the boundary; DV rows excluded") {
     import graft.sources.{GraftCdf, GraftSnapshotFeedStream, SnapOffset}
     val base = freshCatalog("p16q")

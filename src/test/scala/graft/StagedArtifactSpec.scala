@@ -10,8 +10,9 @@ import scala.concurrent.ExecutionContext.Implicits.global
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cross-process staged-artifact tier's two standing invariants
-  * (VERDICT r11 asks #7 and ADVICE r11 on StagedVersion):
+/** The staged-artifact tier's standing invariants (VERDICT r11 asks #7
+  * and ADVICE r11 on StagedVersion), the lint that keeps it the one
+  * build-once path for files, and BuildLog's per-run reset:
   *
   *  1. PUBLISH RACE: two builders racing one fingerprint home — one
   *     atomic rename wins, the loser's temp is discarded, the home
@@ -92,6 +93,110 @@ class StagedArtifactSpec extends AnyFunSuite {
     assert(builds.get() >= 1)
   }
 
+  test("ensureStaged: a build that throws leaves neither a home nor a build temp") {
+    val root = Files.createTempDirectory("graft_ensure_fail").toFile
+    val home = new File(root, "staged_home")
+    val boom = intercept[IllegalStateException] {
+      Tables.ensureStaged(home) { tmp =>
+        Files.write(new File(tmp, "half.txt").toPath, "x".getBytes("UTF-8"))
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(boom.getMessage == "build failed")
+    assert(!home.exists())
+    assert(Option(root.listFiles()).getOrElse(Array.empty).isEmpty,
+      s"stray build temps: ${root.listFiles().map(_.getName).toSeq}")
+    // the next call builds from scratch
+    Tables.ensureStaged(home)(tmp =>
+      Files.write(new File(tmp, "ok.txt").toPath, "y".getBytes("UTF-8")): Unit)
+    assert(home.list().toSeq == Seq("ok.txt"))
+    Tables.rm(root)
+  }
+
+  test("scratchHome: two threads staging one home at once both get a complete home") {
+    // the key reads only each source table's file names, sizes and mtimes
+    val corpus = Files.createTempDirectory("graft_scratch_corpus").toFile
+    Seq("orders", "lineitem").foreach(t => Files.write(
+      new File(corpus, s"$t.parquet").toPath, t.getBytes("UTF-8")))
+    val home = Tables.scratchHome("spec_race", corpus.getAbsolutePath,
+      Seq("orders", "lineitem"), "v1")
+    assert(!home.exists())
+    val start = new CountDownLatch(1)
+    def run(tag: String): Future[Seq[String]] = Future {
+      start.await()
+      Tables.ensureStaged(home) { tmp =>
+        Seq("batch0", "batch1").foreach { n =>
+          Files.write(new File(tmp, n).toPath, tag.getBytes("UTF-8"))
+          Thread.sleep(20) // widen the window a non-atomic publish exposes
+        }
+      }
+      // what this caller's consumer reads once ensureStaged returns
+      Seq("batch0", "batch1").map(n =>
+        new String(Files.readAllBytes(new File(home, n).toPath), "UTF-8"))
+    }
+    val fa = run("A"); val fb = run("B")
+    start.countDown()
+    val (ra, rb) = (Await.result(fa, 30.seconds), Await.result(fb, 30.seconds))
+    // each caller saw both files, from ONE build, and the same build
+    assert(ra.distinct.size == 1 && Set("A", "B").contains(ra.head), ra)
+    assert(rb == ra)
+    val leftovers = home.getParentFile.list()
+      .filter(_.startsWith(home.getName + ".build_"))
+    assert(leftovers.isEmpty, s"stray build temps: ${leftovers.toSeq}")
+    Tables.rm(home)
+    Tables.rm(corpus)
+  }
+
+  /** A call of the staging tier's internals, or a hand-written staging
+    * marker file. */
+  private val handStaging =
+    """\b(?:sharedBuildDir|publishShared)\(|_(?:staged|agg)_from_src""".r
+
+  test("lint pattern: catches hand-rolled staging, passes the rest") {
+    val bad = Seq(
+      "val tmp = Tables.sharedBuildDir(home)",
+      "Tables.publishShared(tmp, home)",
+      "publishShared(build, home): Unit",
+      """val marker = dir.resolve("_staged_from_src")""",
+      """val marker = baseDir.resolve("_agg_from_src")""")
+    val ok = Seq(
+      "Tables.ensureStaged(home) { tmp =>",
+      """Tables.stagedHome("x", sfDir, Seq("orders"), "v1")""",
+      """Tables.scratchHome("x", sfDir, Seq("events"), "v1")""",
+      "// one atomic rename ([[publishShared]])",
+      """Files.exists(dir.resolve("_SUCCESS"))""")
+    bad.foreach(t => assert(handStaging.findFirstIn(t).nonEmpty, t))
+    ok.foreach(t => assert(handStaging.findFirstIn(t).isEmpty, t))
+  }
+
+  test("lint: only Tables.scala publishes staged artifacts") {
+    val srcRoot = new File("src/main/scala")
+    assert(srcRoot.isDirectory, "spec expects repo-root working dir")
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val offenders = for {
+      f <- walk(srcRoot) if f.getName != "Tables.scala"
+      text = new String(Files.readAllBytes(f.toPath), "UTF-8")
+      m <- handStaging.findAllMatchIn(text)
+    } yield s"${f.getPath}:${text.take(m.start).count(_ == '\n') + 1}"
+    assert(offenders.isEmpty,
+      s"staging by hand (use Tables.ensureStaged, which cleans up a " +
+        s"failed build and notes the build in BuildLog): $offenders")
+  }
+
+  test("BuildLog.reset: a new run starts with no builds and no current query") {
+    BuildLog.setCurrent("spec_run1")
+    BuildLog.note("spec_artifact")
+    assert(BuildLog.snapshot().get("spec_run1").exists(_.contains("spec_artifact")))
+    BuildLog.reset()
+    assert(BuildLog.snapshot().isEmpty)
+    // no query on the clock: a build noted now is attributed to nothing
+    BuildLog.note("spec_unattributed")
+    assert(BuildLog.snapshot().isEmpty)
+  }
+
   test("StagedVersion: content-derived, stable, and covers every staging call site") {
     val v = Tables.StagedVersion
     assert(v.nonEmpty && v == Tables.StagedVersion)
@@ -104,7 +209,8 @@ class StagedArtifactSpec extends AnyFunSuite {
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val api = Seq("stagedHome(", "sharedDir(", "stagedFrame(", "ensureStaged(")
+    val api = Seq("stagedHome(", "scratchHome(", "sharedDir(", "stagedFrame(",
+      "ensureStaged(")
     val callers = walk(srcRoot).filter { f =>
       val text = new String(Files.readAllBytes(f.toPath), "UTF-8")
       api.exists(text.contains)
