@@ -6,8 +6,8 @@ package graft
   * primitives call [[note]] when they actually BUILD something — the
   * staged tier ([[Tables.ensureStaged]], cross-process and
   * process-scratch homes alike) and the per-session memo ([[Memo]]).
-  * Every artifact a contract query builds once goes through one of the
-  * two, so none is missing here. Bench emits the resulting map as `artifacts_built` in
+  * Every build-once artifact goes through one of the two, so none is
+  * missing here. Bench emits the resulting map as `artifacts_built` in
   * bench-full.json, so a per-query comparison can see that e.g. x111's
   * line includes the staged-adjacency build while x135's rides it — the
   * self-describing accounting VERDICT r16 asked for after the x71/x142

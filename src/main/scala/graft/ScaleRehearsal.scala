@@ -152,18 +152,22 @@ object ScaleRehearsal {
     spark.stop()
   }
 
-  /** Build (or reuse) the amplified corpus directory. Idempotent via a
-    * completion marker; contents are a pure function of
-    * (sfDir fingerprint, factor), so the marker embeds both. */
+  /** Build (or reuse) the amplified corpus directory, staged once
+    * through [[Tables.ensureStaged]]: its contents are a pure function
+    * of (sfDir fingerprint, factor), so the directory is named by both
+    * and exists only when complete. */
   def buildAmplified(spark: SparkSession, sfDir: String,
       factor: Int): String = {
     val token = Seq("lineitem", "documents", "embeddings")
       .map(t => Tables.corpusFingerprint(sfDir, t)).mkString("|")
     val out = new File(sys.props("java.io.tmpdir"),
-      s"graft_scale${factor}_${((sfDir + token).hashCode & 0x7fffffff).toHexString}")
-    val marker = new File(out, "_complete")
-    if (marker.isFile) return out.getAbsolutePath
-    Tables.rm(out); out.mkdirs()
+      s"graft_amplified${factor}_${((sfDir + token).hashCode & 0x7fffffff).toHexString}")
+    Tables.ensureStaged(out)(tmp => writeAmplified(spark, sfDir, factor, tmp))
+    out.getAbsolutePath
+  }
+
+  private def writeAmplified(spark: SparkSession, sfDir: String, factor: Int,
+      out: File): Unit = {
     val copies = 0 until factor
 
     def guard(df: DataFrame, key: String, stride: Long): Unit = {
@@ -245,8 +249,5 @@ object ScaleRehearsal {
         java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
         java.nio.file.Paths.get(s"$out/$t.parquet")): Unit
     }
-    java.nio.file.Files.write(marker.toPath,
-      token.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-    out.getAbsolutePath
   }
 }

@@ -261,6 +261,7 @@ object Tables {
     * StagedVersionSpec asserts the list covers every source file that
     * calls the staging API. */
   private[graft] val StagedBuilderClasses: Seq[String] = Seq(
+    "graft.ScaleRehearsal",
     "graft.Tables",
     "graft.operators.BasketOps",
     "graft.operators.CurationOps",
