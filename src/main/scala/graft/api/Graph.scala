@@ -85,9 +85,14 @@ object Graph {
     * DECIMAL(28,15) to scaled longs — identical results (see the
     * equality proof at [[FastSumNodeBound]]), codegen-primitive task
     * work. Callers with a staged adjacency derive the bound from
-    * parquet footer stats (max node id), so the switch costs no job. */
-  def pageRankWithDeg(edges: DataFrame, srcCol: String, dstCol: String,
-      degCol: String, iters: Int, nodeBound: Long): DataFrame = {
+    * parquet footer stats (max node id), so the switch costs no job.
+    * Engine-internal: the fast path is exact only if the caller
+    * guarantees that the graph has at most `nodeBound` nodes and that
+    * `degCol` is each source's true out-degree (the rank-mass bound of
+    * [[FastSumNodeBound]]'s proof), and nothing here checks either. */
+  private[graft] def pageRankWithDeg(edges: DataFrame, srcCol: String,
+      dstCol: String, degCol: String, iters: Int,
+      nodeBound: Long): DataFrame = {
     val fast = nodeBound > 0L && nodeBound <= FastSumNodeBound
     val ed = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(degCol).as("deg"))

@@ -428,7 +428,9 @@ object GraftTxn {
     *    breaker's rename succeeds, so two waiters can never both
     *    "delete the stale lock" with one of them actually deleting a
     *    NEW holder's freshly created lock (the read-decide-delete race
-    *    the plain delete had).
+    *    the plain delete had). Breakers take turns and re-check inside
+    *    their turn, and a seized lock that is not the stale one goes
+    *    back ([[breakStaleLock]]).
     *  - OWNERSHIP TOKEN: the holder writes a process+thread+nonce
     *    token into the lock at acquisition and at release deletes the
     *    lock only if the content is still its own token — a holder
@@ -493,17 +495,65 @@ object GraftTxn {
   /** Break a stale lock via rename-then-delete: the rename is atomic,
     * so exactly one of N concurrent breakers wins; the others' renames
     * fail (lock already moved, or the holder released meanwhile) and
-    * they simply re-enter the acquire loop. */
+    * they simply re-enter the acquire loop.
+    *
+    * The caller's staleness check ran before the rename, so the file a
+    * rename seizes need not be the one judged stale: another breaker
+    * may have removed it and a new holder created a fresh lock in
+    * between. Two guards close that gap:
+    *  - breakers take turns: each break runs inside `<lock>.breaking`
+    *    (atomic `createNewFile`), and repeats the staleness check
+    *    there, so no other breaker can replace the lock between the
+    *    check and the rename. A `.breaking` file older than
+    *    [[StaleLockMs]] is a breaker that died mid-break; it is removed
+    *    and the break retried;
+    *  - the seized file is deleted only if it still has the mtime and
+    *    content just judged stale (a holder that was alive after all
+    *    may have released and been succeeded in the gap); otherwise it
+    *    goes back under the lock path by `Files.createLink`, which
+    *    fails if a newer lock already exists there. */
   private def breakStaleLock(lock: File): Unit = {
-    val seized = new File(lock.getParentFile,
-      lock.getName +
-        s".broken_${System.nanoTime()}_${Thread.currentThread().getId}")
+    val turn = new File(lock.getParentFile, lock.getName + ".breaking")
+    val mine =
+      try turn.createNewFile()
+      catch { case _: java.io.IOException => false }
+    if (!mine) {
+      val since = turn.lastModified()
+      if (since > 0 && System.currentTimeMillis() - since > StaleLockMs)
+        turn.delete(): Unit
+      else Thread.sleep(20)
+      return
+    }
     try {
-      java.nio.file.Files.move(lock.toPath, seized.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      seized.delete(): Unit
-    } catch { case _: java.io.IOException => () }
+      val mtime = lock.lastModified()
+      val content = lockContent(lock)
+      if (mtime > 0 && System.currentTimeMillis() - mtime > StaleLockMs) {
+        breakHook()
+        val seized = new File(lock.getParentFile,
+          lock.getName +
+            s".broken_${System.nanoTime()}_${Thread.currentThread().getId}")
+        try {
+          java.nio.file.Files.move(lock.toPath, seized.toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+          if (seized.lastModified() != mtime || lockContent(seized) != content)
+            try java.nio.file.Files.createLink(lock.toPath, seized.toPath): Unit
+            catch { case _: java.io.IOException => () }
+          seized.delete(): Unit
+        } catch { case _: java.io.IOException => () }
+      }
+    } finally turn.delete(): Unit
   }
+
+  /** The lock file's content, or None if it cannot be read (vanished). */
+  private def lockContent(lock: File): Option[String] =
+    try Some(new String(java.nio.file.Files.readAllBytes(lock.toPath),
+      java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: java.io.IOException => None }
+
+  /** Test seam: runs in [[breakStaleLock]] after its staleness check
+    * and before the rename, so a spec can replace the lock inside that
+    * gap deterministically. Production value is a no-op. */
+  @volatile private[graft] var breakHook: () => Unit = () => ()
 
   /** Delete the lock only if it still carries OUR token — after a
     * break + re-acquire by another writer, the path holds the new
@@ -538,10 +588,7 @@ object GraftTxn {
         seized.delete(): Unit
       } catch { case _: java.io.IOException => () }
     }
-    val content =
-      try Some(new String(java.nio.file.Files.readAllBytes(lock.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: java.io.IOException => None }
+    val content = lockContent(lock)
     val _ = tokenWritten // retained for call-site compatibility
     content match {
       case Some(c) if c == token => atomicDelete()

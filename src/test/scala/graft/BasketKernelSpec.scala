@@ -12,8 +12,9 @@ import graft.operators.{BasketOps, GraphOps}
   * basket-keyed self-join for the pairs (the shape of the DuckDB
   * oracles); the order-keyed lineitem self-join + DISTINCT for the
   * co-purchase edges; posexplode + explode(slice(...)), the in-row
-  * spelling the basket pairs used before the enumerator. Those
-  * references live only here.
+  * spelling the basket pairs used before the enumerator; and the
+  * `collect_set` aggregate the basket rows were built with before the
+  * sort-based pass. Those references live only here.
   *
   *  1. CORPUS PARITY at sf0.01: the shared order pair frame, x71 and
   *     x142 row for row, the shared customer pair frame, x144 and x160
@@ -22,7 +23,11 @@ import graft.operators.{BasketOps, GraphOps}
   *  2. PLANTED CASES: duplicated lines, baskets at the cap and one
   *     over it, string items, null items and null baskets; single-part
   *     and null orders for the edges; empty, one-element and tied
-  *     struct arrays for the enumerator.
+  *     struct arrays for the enumerator; a basket spread over several
+  *     input partitions in reverse order, and 10 000-row baskets that
+  *     reduce to the cap and one over it.
+  *  3. THE BASKET BUILD'S PLAN: one hash exchange on the basket below
+  *     the pass, and no aggregate.
   */
 class BasketKernelSpec extends SparkSpec {
 
@@ -36,6 +41,17 @@ class BasketKernelSpec extends SparkSpec {
       .filter(col("sz") <= cap).select(col("basket"))
     li.join(ok, "basket")
   }
+
+  /** The aggregate spelling [[BasketOps.basketItems]] had before its
+    * sort-based pass: `collect_set` per basket, sorted, with a null-item
+    * flag for the cap. */
+  private def refBasketItems(bi: DataFrame, cap: Int): DataFrame =
+    bi.filter(col("basket").isNotNull)
+      .groupBy(col("basket"))
+      .agg(array_sort(collect_set(col("item"))).as("items"),
+        max(col("item").isNull.cast("int")).as("null_item"))
+      .filter(size(col("items")) + col("null_item") <= cap)
+      .select(col("basket"), col("items"))
 
   private def refPairs(capped: DataFrame, minBaskets: Long): DataFrame =
     capped.select(col("basket"), col("item").as("part_a"))
@@ -306,5 +322,99 @@ class BasketKernelSpec extends SparkSpec {
     sameSet(BasketOps.coOccurrencePairs(bi, basketCap = 50, minBaskets = 1L),
       refPairs(refCapped(bi, 50), 1L))
     assert(BasketOps.coOccurrencePairs(bi, 50, 1L).count() == 50L * 49 / 2)
+  }
+
+  // ------------------------------------------- sort-based basket pass
+
+  /** The basket frame against the `collect_set` spelling: the same
+    * schema, and the same rows once sorted by basket. */
+  private def sameBaskets(bi: DataFrame, cap: Int): Seq[Row] = {
+    val got = BasketOps.basketItems(bi, cap)
+    val want = refBasketItems(bi, cap)
+    assert(got.schema == want.schema)
+    val g = got.collect().toSeq.sortBy(_.get(0).toString)
+    assert(g == want.collect().toSeq.sortBy(_.get(0).toString))
+    g
+  }
+
+  test("basket rows equal the collect_set spelling over the sf0.01 order " +
+      "and customer baskets") {
+    assert(sameBaskets(orderItems(sf01), 50).nonEmpty)
+    assert(sameBaskets(custItems(sf01), 64).nonEmpty)
+    assert(sameBaskets(orderItems(sf01), Int.MaxValue).nonEmpty)
+  }
+
+  test("a basket spread over several input partitions in reverse order " +
+      "comes out as one sorted row") {
+    import spark.implicits._
+    val rows = (1 to 40).reverse.flatMap(i =>
+      Seq((7L, i.toLong), (7L, i.toLong), (3L, (i % 5).toLong)))
+    val bi = rows.toDF("basket", "item").repartition(4)
+    assert(bi.rdd.glom().collect().count(_.exists(_.getLong(0) == 7L)) > 1,
+      "basket 7 must start out in more than one partition")
+    val got = sameBaskets(bi, 50)
+    assert(got.map(r => r.getLong(0) -> r.getSeq[Long](1)) ==
+      Seq(3L -> (0L to 4L), 7L -> (1L to 40L)))
+  }
+
+  test("10 000-row baskets with duplicates: cap + 1 distinct items are " +
+      "dropped, exactly cap are kept") {
+    import spark.implicits._
+    val cap = 50
+    val rnd = new scala.util.Random(11)
+    val rows = rnd.shuffle((0 until 10000).flatMap(i =>
+      Seq(("over", s"i${i % (cap + 1)}"), ("at", s"i${i % cap}"))))
+    val bi = rows.toDF("basket", "item").repartition(3)
+    val got = sameBaskets(bi, cap)
+    assert(got.map(_.getString(0)) == Seq("at"))
+    assert(got.head.getSeq[String](1) == (0 until cap).map(i => s"i$i").sorted)
+  }
+
+  test("string items with nulls: a null counts once toward the cap and " +
+      "is never an item") {
+    import spark.implicits._
+    val n: String = null
+    val bi = Seq(
+      ("a", n), ("a", "q"), ("a", "p"), ("a", n), ("a", "q"),  // 3: kept
+      ("b", n), ("b", "x"), ("b", "y"), ("b", "z"),            // 4: over
+      ("c", n), ("c", n),                                      // only nulls
+      ("d", "b"), ("d", "B"), ("d", ""), ("d", "b"),           // byte order
+      (n, "p"), (n, n)                                         // no basket
+    ).toDF("basket", "item").repartition(3)
+    val got = sameBaskets(bi, 3)
+    assert(got.map(r => r.getString(0) -> r.getSeq[String](1)) == Seq(
+      "a" -> Seq("p", "q"), "c" -> Seq(), "d" -> Seq("", "B", "b")))
+  }
+
+  test("the basket build holds one hash exchange on the basket below the " +
+      "pass, and no aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectSet
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val baskets = BasketOps.basketItems(orderItems(sf01), 50)
+    baskets.collect()
+    val plan = flattenPlan(baskets.queryExecution.executedPlan)
+    val aggs = plan.collect { case a: BaseAggregateExec => a.nodeName }
+    assert(aggs.isEmpty, s"the basket build must not aggregate: $aggs")
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[CollectSet]))))
+    val passes = plan.collect { case m: MapPartitionsExec => m }
+    assert(passes.size == 1)
+    def keys(p: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      p.collect { case e: ShuffleExchangeExec =>
+        e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.map {
+            case a: AttributeReference => a.name
+            case x => x.sql
+          }
+          case other => Seq(other.toString)
+        }
+      }
+    assert(keys(plan) == Seq(Seq("basket")),
+      s"expected exactly one hash exchange, on the basket: ${keys(plan)}")
+    assert(keys(flattenPlan(passes.head)) == Seq(Seq("basket")),
+      "the exchange must sit below the pass")
   }
 }

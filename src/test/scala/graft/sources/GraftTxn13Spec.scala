@@ -75,6 +75,52 @@ class GraftTxn13Spec extends AnyFunSuite {
     }
   }
 
+  test("a breaker whose stale lock was replaced by a live holder's in " +
+      "the check-to-rename gap puts the live lock back and waits") {
+    val dir = freshDir("gap")
+    val lock = new File(dir.getParentFile, dir.getName + ".commitlock")
+    withStaleWindow(5000L) {
+      assert(lock.createNewFile())
+      assert(lock.setLastModified(System.currentTimeMillis() - 60000L))
+      val fired = new java.util.concurrent.CountDownLatch(1)
+      val liveHolds = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val entered = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val enteredWhileLive =
+        new java.util.concurrent.atomic.AtomicBoolean(false)
+      // after the breaker judged the crashed lock stale and before its
+      // rename: another breaker removes the crashed lock and a live
+      // writer creates a fresh one with its token
+      GraftTxn.breakHook = () => if (fired.getCount > 0) {
+        lock.delete(): Unit
+        lock.createNewFile(): Unit
+        java.nio.file.Files.write(lock.toPath, "live".getBytes("UTF-8")): Unit
+        liveHolds.set(true)
+        fired.countDown()
+      }
+      try {
+        val breaker = new Thread(() => GraftTxn.withCommitLock(dir) {
+          if (liveHolds.get()) enteredWhileLive.set(true)
+          entered.set(true)
+        })
+        breaker.start()
+        assert(fired.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        Thread.sleep(300) // the breaker spins meanwhile
+        assert(!entered.get(),
+          "the breaker entered while the live holder held the lock")
+        assert(new String(java.nio.file.Files.readAllBytes(lock.toPath),
+          "UTF-8") == "live", "the live holder's lock was not put back")
+        liveHolds.set(false)
+        GraftTxn.releaseIfOwned(lock, "live")
+        breaker.join(30000)
+        assert(entered.get(), "the breaker never acquired after the release")
+        assert(!enteredWhileLive.get())
+      } finally GraftTxn.breakHook = () => ()
+    }
+    assert(!lock.exists(), "lock must be released")
+    assert(dir.getParentFile.list().count(_.startsWith(lock.getName)) == 0,
+      "no seized sibling may be left behind")
+  }
+
   test("release is ownership-checked: a holder cannot delete a successor's lock") {
     val dir = freshDir("own")
     val lock = new File(dir.getParentFile, dir.getName + ".commitlock")
